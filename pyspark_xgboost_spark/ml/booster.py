@@ -17,10 +17,21 @@ across workers. All workers then derive identical splits, so the
 ensemble is bit-identical on every worker. This is the same
 aggregation pattern XGBoost runs over Rabit; here the reduction is a
 ``Comm`` abstraction: in-process no-op for single-worker training,
-``BarrierTaskContext.allGather`` for Spark barrier-mode training
-(see tracker.py). Histograms are O(nodes × features × bins) — KBs to
-a few MB — regardless of shard row count, which is what makes the
+a direct-TCP reduce star/tree for Spark barrier-mode training (see
+comm.py, tracker.py). Histograms are O(nodes × features × bins) — KBs
+to a few MB — regardless of shard row count, which is what makes the
 pattern viable at 100 TB.
+
+Per-level work (``_grow_tree``): one allreduce per tree level. Below the
+root only the smaller child of each split (by the globally reduced
+hessian) gets a bincount pass and crosses the wire; its sibling is
+derived as parent − built, so bincount work and histogram bytes are
+about half of building every node. Bin codes are stored feature-major
+``(f, n)`` so each per-feature pass reads a contiguous row, and rows are
+routed with one flat gather per level and copied only on levels where
+some of them settled in a leaf. Prediction compiles each tree once into
+flat arrays whose leaves self-loop and walks all rows level by level,
+``depth`` gathers per tree.
 
 If a real ``xgboost`` package is importable, the estimator layer uses
 it instead (see estimator.py); this module is the self-contained
@@ -191,8 +202,10 @@ def compute_bin_edges(
     """
     comm = comm or LocalComm()
     if len(X) > sample_rows:
-        stride = len(X) // sample_rows
-        sample = X[::stride][:sample_rows]
+        # evenly spaced over the WHOLE shard: a ``[::stride]`` prefix cut
+        # keeps only the first ``sample_rows`` rows whenever the shard
+        # is under twice the sample size
+        sample = X[np.arange(sample_rows, dtype=np.int64) * len(X) // sample_rows]
     else:
         sample = X
     gathered = comm.allgather_rows(np.ascontiguousarray(sample, dtype=np.float32))
@@ -219,19 +232,21 @@ def n_bins_p1(edges: list[np.ndarray]) -> int:
 
 
 def bin_matrix(X: np.ndarray, edges: list[np.ndarray], missing: float) -> np.ndarray:
-    """float matrix → uint16 bin codes; global last slot == missing."""
+    """float matrix ``(n, f)`` → FEATURE-MAJOR uint16 bin codes ``(f, n)``;
+    the global last slot == missing. Feature-major so every per-feature
+    histogram pass and every routing gather reads one contiguous row."""
     n, f = X.shape
     sentinel = n_bins_p1(edges) - 1
-    B = np.empty((n, f), dtype=np.uint16)
+    codes = np.empty((f, n), dtype=np.uint16)
     for j in range(f):
         col = X[:, j].astype(np.float64)
         if not math.isnan(missing):
             col = np.where(col == missing, np.nan, col)
         nan_mask = np.isnan(col)
-        codes = np.searchsorted(edges[j], col, side="right")
-        codes[nan_mask] = sentinel
-        B[:, j] = codes
-    return B
+        c = np.searchsorted(edges[j], col, side="right")
+        c[nan_mask] = sentinel
+        codes[j] = c
+    return codes
 
 
 # ---------------------------------------------------------------------------
@@ -239,8 +254,16 @@ def bin_matrix(X: np.ndarray, edges: list[np.ndarray], missing: float) -> np.nda
 # ---------------------------------------------------------------------------
 
 
+def _missing_as_nan(X: np.ndarray, missing: float) -> np.ndarray:
+    """``X`` with the ``missing`` sentinel mapped to NaN (no copy when
+    missing is NaN already)."""
+    if math.isnan(missing):
+        return X
+    return np.where(X == missing, np.float32(np.nan), X)
+
+
 class _Tree:
-    __slots__ = ("feature", "threshold", "left", "right", "value", "default_left")
+    __slots__ = ("feature", "threshold", "left", "right", "value", "default_left", "_flat")
 
     def __init__(self):
         self.feature: list[int] = []
@@ -249,6 +272,7 @@ class _Tree:
         self.right: list[int] = []
         self.value: list[float] = []
         self.default_left: list[bool] = []
+        self._flat = None  # compiled traversal arrays, built on first predict
 
     def add_node(self) -> int:
         self.feature.append(-1)
@@ -280,28 +304,52 @@ class _Tree:
         t.default_left = list(d["default_left"])
         return t
 
-    def predict_margin(self, X: np.ndarray, missing: float) -> np.ndarray:
-        feat = np.asarray(self.feature, dtype=np.int32)
-        thr = np.asarray(self.threshold, dtype=np.float64)
-        left = np.asarray(self.left, dtype=np.int32)
-        right = np.asarray(self.right, dtype=np.int32)
-        val = np.asarray(self.value, dtype=np.float64)
-        dleft = np.asarray(self.default_left, dtype=bool)
+    def _compiled(self):
+        """Flat node arrays for level-synchronous traversal, compiled
+        once per (finished) tree. Leaves self-loop — both children are
+        the leaf itself, and a NaN threshold never sends a row right —
+        so every row walks exactly ``depth`` steps with no per-step
+        frontier test."""
+        if self._flat is None:
+            feat = np.asarray(self.feature, dtype=np.intp)
+            leaf = feat < 0
+            ids = np.arange(len(feat))
+            left = np.where(leaf, ids, np.asarray(self.left, dtype=np.intp))
+            right = np.where(leaf, ids, np.asarray(self.right, dtype=np.intp))
+            depth, level = 0, np.array([0])
+            while not leaf[level].all():
+                level = np.concatenate([left[level], right[level]])[
+                    ~np.concatenate([leaf[level], leaf[level]])
+                ]
+                depth += 1
+            self._flat = (
+                np.where(leaf, 0, feat),
+                np.where(leaf, np.nan, np.asarray(self.threshold, dtype=np.float64)),
+                np.column_stack([left, right]).reshape(-1),  # children of i at 2i, 2i+1
+                np.where(np.asarray(self.default_left, dtype=bool), left, right),
+                np.asarray(self.value, dtype=np.float64),
+                depth,
+            )
+        return self._flat
 
-        idx = np.zeros(len(X), dtype=np.int32)
-        while True:
-            internal = feat[idx] >= 0
-            if not internal.any():
-                break
-            rows = np.nonzero(internal)[0]
-            f = feat[idx[rows]]
-            x = X[rows, f].astype(np.float64)
-            if not math.isnan(missing):
-                x = np.where(x == missing, np.nan, x)
-            nan_mask = np.isnan(x)
-            go_left = np.where(nan_mask, dleft[idx[rows]], x < thr[idx[rows]])
-            idx[rows] = np.where(go_left, left[idx[rows]], right[idx[rows]])
-        return val[idx]
+    def predict_margin(self, X: np.ndarray, missing: float) -> np.ndarray:
+        """Leaf value per row of the C-contiguous float32 matrix ``X``:
+        one flat gather of each row's current-node feature per level."""
+        feat, thr, children, default_child, val, depth = self._compiled()
+        X = _missing_as_nan(X, missing)
+        n, f = X.shape
+        flat = X.reshape(-1)
+        row_base = np.arange(n, dtype=np.intp) * f
+        idx = np.zeros(n, dtype=np.intp)
+        for _ in range(depth):
+            x = flat.take(row_base + feat.take(idx))
+            # 'x >= thr' is 'not x < thr' for real x; False for NaN x
+            nxt = children.take(2 * idx + (x >= thr.take(idx)))
+            nan = np.isnan(x)
+            if nan.any():
+                nxt[nan] = default_child.take(idx[nan])
+            idx = nxt
+        return val.take(idx)
 
 
 # ---------------------------------------------------------------------------
@@ -309,22 +357,44 @@ class _Tree:
 # ---------------------------------------------------------------------------
 
 
-def _build_histograms(B, g, h, node_of_row, n_nodes, n_bins_p1):
-    """(n_nodes, n_features, max_bin+1) grad/hess sums via bincount."""
-    n, f = B.shape
-    hist_g = np.empty((n_nodes, f, n_bins_p1))
-    hist_h = np.empty((n_nodes, f, n_bins_p1))
-    base = node_of_row.astype(np.int64) * n_bins_p1
+def _build_histograms(codes, g, h, node_of_row, n_nodes, n_bins_p1):
+    """Stacked ``(2, n_nodes, n_features, n_bins_p1)`` grad/hess sums of
+    the rows given by feature-major ``codes`` (f, m), via bincount."""
+    f = codes.shape[0]
+    hist = np.empty((2, n_nodes, f, n_bins_p1))
+    base = node_of_row * n_bins_p1
     size = n_nodes * n_bins_p1
     for j in range(f):
-        idx = base + B[:, j]
-        hist_g[:, j, :] = np.bincount(idx, weights=g, minlength=size).reshape(
-            n_nodes, n_bins_p1
+        idx = base + codes[j]
+        hist[0, :, j] = np.bincount(idx, weights=g, minlength=size).reshape(n_nodes, n_bins_p1)
+        hist[1, :, j] = np.bincount(idx, weights=h, minlength=size).reshape(n_nodes, n_bins_p1)
+    return hist
+
+
+def _child_histograms(codes, g, h, slot, parent_hist, child_H, comm):
+    """Global histograms of every child slot — slots 2p and 2p+1 are the
+    children of split p, whose global histogram is ``parent_hist[:, p]``.
+
+    Only the smaller child of each pair by the globally reduced
+    ``child_H`` (ties left, so every rank picks the same one) is counted
+    and allreduced; its sibling is ``parent − built``."""
+    n_pairs = len(child_H) // 2
+    pairs = np.arange(n_pairs)
+    small = 2 * pairs + (child_H[1::2] < child_H[0::2])
+    built_of_slot = np.full(2 * n_pairs, -1, dtype=np.intp)
+    built_of_slot[small] = pairs
+    k = built_of_slot.take(slot)
+    rows = np.flatnonzero(k >= 0)
+    built = comm.allreduce_sum(
+        _build_histograms(
+            codes.take(rows, axis=1), g.take(rows), h.take(rows), k.take(rows),
+            n_pairs, parent_hist.shape[-1],
         )
-        hist_h[:, j, :] = np.bincount(idx, weights=h, minlength=size).reshape(
-            n_nodes, n_bins_p1
-        )
-    return hist_g, hist_h
+    )
+    hist = np.empty((2, 2 * n_pairs) + built.shape[2:])
+    hist[:, small] = built
+    hist[:, small ^ 1] = parent_hist - built
+    return hist
 
 
 def _best_splits(hist_g, hist_h, reg_lambda, gamma, min_child_weight, edge_counts=None):
@@ -425,19 +495,20 @@ class Booster:
         return self.num_class if self.objective == "multi:softprob" else 1
 
     def raw_margin(self, X: np.ndarray, iteration_range: tuple[int, int] | None = None) -> np.ndarray:
-        X = np.ascontiguousarray(X, dtype=np.float32)
+        # missing → NaN once here, not once per tree
+        X = _missing_as_nan(np.ascontiguousarray(X, dtype=np.float32), self.missing)
         k = self._group()
         n_rounds = len(self.trees) // k
         lo, hi = (0, n_rounds) if iteration_range is None else iteration_range
         if k == 1:
             m = np.full(len(X), self.base_score, dtype=np.float64)
             for t in self.trees[lo:hi]:
-                m += t.predict_margin(X, self.missing)
+                m += t.predict_margin(X, math.nan)
             return m
         m = np.full((len(X), k), self.base_score, dtype=np.float64)
         for r in range(lo, hi):
             for c in range(k):
-                m[:, c] += self.trees[r * k + c].predict_margin(X, self.missing)
+                m[:, c] += self.trees[r * k + c].predict_margin(X, math.nan)
         return m
 
     def predict(self, X: np.ndarray, output_margin: bool = False, base_margin=None) -> np.ndarray:
@@ -581,9 +652,15 @@ def _spill_to_memmap(arr: np.ndarray, workdir: str, name: str) -> np.ndarray:
     return mm
 
 
-def _grow_tree(B, edges, g, h, max_depth, reg_lambda, gamma, min_child_weight, lr, comm):
-    """One depth-wise tree over binned data; histograms allreduced so all
-    workers grow the identical tree.
+def _grow_tree(codes, edges, g, h, max_depth, reg_lambda, gamma, min_child_weight, lr, comm):
+    """One depth-wise tree over feature-major bin codes ``(f, n)``;
+    histograms allreduced so all workers grow the identical tree.
+
+    Sibling subtraction: below the root only the SMALLER child of each
+    split (by the globally reduced child hessian, ties left — the same
+    choice on every rank) gets a histogram pass and crosses the wire;
+    its sibling is ``parent − built``. One allreduce per level, as
+    before, with about half the bincount work and payload.
 
     Returns ``(tree, delta)`` where ``delta`` is this shard's margin
     update (leaf value of the node each local row lands in). Rows are
@@ -592,42 +669,37 @@ def _grow_tree(B, edges, g, h, max_depth, reg_lambda, gamma, min_child_weight, l
     routing (``code <= b``) is exactly the float predicate
     (``x < edges[f][b]``) because codes are searchsorted-right ranks.
     """
-    n = len(B)
+    n = codes.shape[1]
     nbp1 = n_bins_p1(edges)
+    edge_counts = [len(e) for e in edges]
+    bin_ids = np.arange(nbp1)
     tree = _Tree()
-    root = tree.add_node()
-    node_of_row = np.zeros(n, dtype=np.int64)
-    row_idx = np.arange(n, dtype=np.int64)  # original positions of live rows
-    delta = np.zeros(n, dtype=np.float64)
     # level-order frontier: node ids whose rows are tagged with slot s
-    frontier = [root]
-    # per-slot grad/hess totals carried from the parent's histograms so
-    # max-depth leaves need no extra histogram pass (or allreduce)
-    node_G: np.ndarray | None = None
-    node_H: np.ndarray | None = None
+    frontier = [tree.add_node()]
+    slot = np.zeros(n, dtype=np.intp)
+    row_idx = None  # original positions of live rows; None while all are live
+    delta = np.zeros(n, dtype=np.float64)
+    hist = comm.allreduce_sum(_build_histograms(codes, g, h, slot, 1, nbp1))
+    # per-slot grad/hess totals; a max-depth leaf takes its parent
+    # split's child totals, so needs no extra histogram pass
+    node_G = hist[0, :, 0, :].sum(axis=1)
+    node_H = hist[1, :, 0, :].sum(axis=1)
 
-    for _depth in range(max_depth):
+    for depth in range(max_depth):
         n_slots = len(frontier)
-        if n_slots == 0:
-            break
-        hist_g, hist_h = _build_histograms(B, g, h, node_of_row, n_slots, nbp1)
-        # sum shard-local histograms across the cluster — the ONLY
-        # cross-worker exchange in the training loop
-        stacked = comm.allreduce_sum(np.stack([hist_g, hist_h]))
-        hist_g, hist_h = stacked[0], stacked[1]
-        gain, feat, bins, dleft, G_tot, H_tot = _best_splits(
-            hist_g, hist_h, reg_lambda, gamma, min_child_weight,
-            edge_counts=[len(e) for e in edges],
+        hist_g, hist_h = hist[0], hist[1]
+        gain, feat, bins, dleft, _, _ = _best_splits(
+            hist_g, hist_h, reg_lambda, gamma, min_child_weight, edge_counts=edge_counts
         )
 
         new_frontier: list[int] = []
-        slot_remap = np.full(n_slots * 2, -1, dtype=np.int64)
-        split_feat = np.full(n_slots, -1, dtype=np.int64)
-        split_code = np.zeros(n_slots, dtype=np.int64)
-        split_dl = np.zeros(n_slots, dtype=bool)
+        parent_slots: list[int] = []
+        # route[s, code] = child slot of a row of slot s with that code
+        route = np.zeros((n_slots, nbp1), dtype=np.intp)
+        split_feat = np.full(n_slots, -1, dtype=np.intp)
         slot_value = np.zeros(n_slots, dtype=np.float64)
-        child_G = np.zeros(n_slots * 2, dtype=np.float64)
-        child_H = np.zeros(n_slots * 2, dtype=np.float64)
+        child_G: list[float] = []
+        child_H: list[float] = []
         for s, node in enumerate(frontier):
             f = int(feat[s])
             # node totals: sum any single feature's histogram over its bins
@@ -641,70 +713,63 @@ def _grow_tree(B, edges, g, h, max_depth, reg_lambda, gamma, min_child_weight, l
                 continue
             li = tree.add_node()
             ri = tree.add_node()
+            b = int(bins[s])
             tree.feature[node] = f
-            tree.threshold[node] = float(edges[f][int(bins[s])])
+            tree.threshold[node] = float(edges[f][b])
             tree.left[node] = li
             tree.right[node] = ri
             tree.default_left[node] = bool(dleft[s])
-            slot_remap[2 * s] = len(new_frontier)
-            slot_remap[2 * s + 1] = len(new_frontier) + 1
+            lo = len(new_frontier)
             split_feat[s] = f
-            b = int(bins[s])
-            split_code[s] = b
-            split_dl[s] = bool(dleft[s])
+            # missing is the single GLOBAL sentinel slot (bin_matrix);
+            # len(edges[f]) itself is a real bin (values above the last cut)
+            route[s] = np.where(bin_ids <= b, lo, lo + 1)
+            route[s, -1] = lo if dleft[s] else lo + 1
             # chosen-split child totals (missing bucket goes default side)
             Gm = hist_g[s, f, -1]
             Hm = hist_h[s, f, -1]
             GL = hist_g[s, f, : b + 1].sum() + (Gm if dleft[s] else 0.0)
             HL = hist_h[s, f, : b + 1].sum() + (Hm if dleft[s] else 0.0)
-            child_G[2 * s] = GL
-            child_G[2 * s + 1] = Gn - GL
-            child_H[2 * s] = HL
-            child_H[2 * s + 1] = Hn - HL
+            child_G += [GL, Gn - GL]
+            child_H += [HL, Hn - HL]
             new_frontier.extend([li, ri])
+            parent_slots.append(s)
 
         # rows whose slot became a leaf this level get their margin now
-        leaf_rows = split_feat[node_of_row] < 0
-        if leaf_rows.any():
-            delta[row_idx[leaf_rows]] = slot_value[node_of_row[leaf_rows]]
-        if not new_frontier:
-            return tree, delta
-        # route rows to child slots
-        rows = np.nonzero(~leaf_rows)[0]
-        s_of_rows = node_of_row[rows]
-        codes = B[rows, split_feat[s_of_rows]]
-        # missing is the single GLOBAL sentinel slot (bin_matrix);
-        # len(edges[f]) itself is a real bin (values above the last cut)
-        is_missing = codes == (nbp1 - 1)
-        go_left = np.where(is_missing, split_dl[s_of_rows], codes <= split_code[s_of_rows])
-        child_slot = slot_remap[2 * s_of_rows + np.where(go_left, 0, 1)]
-        # leaf rows drop out of the frontier
-        B = B[rows]
-        g = g[rows]
-        h = h[rows]
-        row_idx = row_idx[rows]
-        node_of_row = child_slot
+        # and drop out; the copy is skipped on levels where none did
+        if len(parent_slots) < n_slots:
+            leaf_rows = split_feat.take(slot) < 0
+            settled = np.flatnonzero(leaf_rows)
+            delta[settled if row_idx is None else row_idx[settled]] = slot_value.take(
+                slot[settled]
+            )
+            if not new_frontier:
+                return tree, delta
+            if len(settled):
+                live = np.flatnonzero(~leaf_rows)
+                codes = codes.take(live, axis=1)
+                g, h, slot = g.take(live), h.take(live), slot.take(live)
+                row_idx = live if row_idx is None else row_idx.take(live)
+        # route rows to child slots: one flat gather of each row's code
+        # at its slot's split feature, one lookup in the route table
+        m = codes.shape[1]
+        pos = split_feat.take(slot) * m
+        pos += np.arange(m)
+        slot = route.reshape(-1).take(slot * nbp1 + codes.reshape(-1).take(pos))
         frontier = new_frontier
-        valid = slot_remap >= 0
-        node_G = np.empty(len(new_frontier), dtype=np.float64)
-        node_H = np.empty(len(new_frontier), dtype=np.float64)
-        node_G[slot_remap[valid]] = child_G[valid]
-        node_H[slot_remap[valid]] = child_H[valid]
+        node_G = np.asarray(child_G)
+        node_H = np.asarray(child_H)
+        if depth + 1 == max_depth:
+            break
+        hist = _child_histograms(codes, g, h, slot, hist[:, parent_slots], node_H, comm)
 
-    # any remaining frontier nodes at max depth become leaves; totals were
-    # carried from the parent split, so no histogram pass is needed
-    if frontier:
-        if node_G is None or node_H is None:
-            # max_depth == 0: no split level ran; fall back to one histogram
-            hist_g, hist_h = _build_histograms(B, g, h, node_of_row, len(frontier), nbp1)
-            stacked = comm.allreduce_sum(np.stack([hist_g, hist_h]))
-            node_G = stacked[0][:, 0, :].sum(axis=1)
-            node_H = stacked[1][:, 0, :].sum(axis=1)
-        vals = -node_G / (node_H + reg_lambda) * lr
-        for s, node in enumerate(frontier):
-            tree.value[node] = float(vals[s])
-        if len(row_idx):
-            delta[row_idx] = vals[node_of_row]
+    # the remaining frontier becomes leaves, from the carried totals
+    vals = -node_G / (node_H + reg_lambda) * lr
+    for s, node in enumerate(frontier):
+        tree.value[node] = float(vals[s])
+    if row_idx is None:
+        return tree, vals.take(slot)
+    delta[row_idx] = vals.take(slot)
     return tree, delta
 
 
@@ -754,10 +819,10 @@ def train(
         workdir = tempfile.mkdtemp(prefix="gbt_ext_")
         X = _spill_to_memmap(X, workdir, "features")
         edges = compute_bin_edges(X, int(p["max_bin"]), comm)
-        B = _spill_to_memmap(bin_matrix(X, edges, missing), workdir, "codes")
+        codes = _spill_to_memmap(bin_matrix(X, edges, missing), workdir, "codes")
     else:
         edges = compute_bin_edges(X, int(p["max_bin"]), comm)
-        B = bin_matrix(X, edges, missing)
+        codes = bin_matrix(X, edges, missing)
 
     init_trees: list[_Tree] = []
     if xgb_model is not None:
@@ -793,6 +858,7 @@ def train(
     has_eval = eval_set is not None
     if has_eval:
         eX = np.ascontiguousarray(eval_set[0], dtype=np.float32)
+        eX_nan = _missing_as_nan(eX, missing)
         ey = np.asarray(eval_set[1], dtype=np.float64)
         ew = None if eval_weight is None else np.asarray(eval_weight, dtype=np.float64)
         if xgb_model is not None:
@@ -825,7 +891,7 @@ def train(
             gk = g[:, k] if K > 1 else g
             hk = h[:, k] if K > 1 else h
             tree, delta = _grow_tree(
-                B,
+                codes,
                 edges,
                 np.ascontiguousarray(gk),
                 np.ascontiguousarray(hk),
@@ -842,7 +908,7 @@ def train(
             else:
                 margin += delta
             if has_eval and len(eX):
-                de = tree.predict_margin(eX, missing)
+                de = tree.predict_margin(eX_nan, math.nan)
                 if K > 1:
                     e_margin[:, k] += de
                 else:

@@ -27,11 +27,13 @@ exactly one message per client per round.
 
 Star topology is O(workers × payload) on rank 0 per round; histogram
 payloads are O(nodes × features × bins) ≈ low MB, independent of data
-scale, so this holds up at 100-TB row counts for gangs up to a few
-dozen workers. Beyond that, ``build_tree_comm`` provides a two-level
-tree: workers form √n-sized groups of contiguous ranks, each group
-leader hosts the same ``_ReduceServer`` for its group with a
-``reduce_hook`` that chains the group result into an upper-level
+scale. Below the root only the built (smaller) child of each split
+crosses the wire, its sibling derived locally as parent − built, so a
+level moves about half its nodes. This holds up at 100-TB row counts
+for gangs up to a few dozen workers. Beyond that, ``build_tree_comm``
+provides a two-level tree: workers form √n-sized groups of contiguous
+ranks, each group leader hosts the same ``_ReduceServer`` for its group
+with a ``reduce_hook`` that chains the group result into an upper-level
 exchange among leaders (root = rank 0). Per round rank 0 then moves
 O(√n × payload) instead of O(n × payload), members are byte-identical
 to star clients, and both topologies sit behind the same ``SocketComm``

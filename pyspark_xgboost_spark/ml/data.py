@@ -1,19 +1,25 @@
 """Arrow-batch → feature-matrix assembly (reference data.py rewrite).
 
-Inside ``mapInPandas``/``pandas_udf`` the data model is columnar pandas
-batches; this module concatenates them into the dense float32 matrix +
-label/weight/margin vectors the kernel consumes, enforcing uniform
-feature dimensionality (reference data.py:120-130) and splitting
-train/validation rows by the boolean indicator inside pandas so the
-split stays partition-local (reference data.py:158-160).
+Inside ``mapInArrow`` the data model is a stream of ``pyarrow``
+RecordBatches: ``values`` is a ``list<float>`` column (one feature
+vector per row), beside ``label`` and the optional ``weight``,
+``baseMargin`` and ``validationIndicator`` columns. This module turns
+them into the dense float32 matrix + label/weight/margin vectors the
+kernel consumes without a per-row Python object: the list column's flat
+values child is viewed zero-copy and reshaped to ``(n, f)``, and the
+uniform feature dimensionality (reference data.py:120-130) is checked on
+the list offsets. Train/validation rows are split by the boolean
+indicator, partition-locally (reference data.py:158-160). pandas
+DataFrames are accepted too and converted to RecordBatches on entry.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 
 class MatrixBundle:
@@ -26,41 +32,56 @@ class MatrixBundle:
         self.base_margin = base_margin
 
 
-def _stack_features(series: pd.Series) -> np.ndarray:
-    if len(series) == 0:
-        return np.empty((0, 0), dtype=np.float32)
-    arrs = series.to_numpy()
-    dims = {len(a) for a in arrs}
+def _feature_matrix(chunks: list[pa.ListArray]) -> np.ndarray:
+    """``list<float>`` chunks → ``(n, f)`` float32; zero-copy for one
+    null-free chunk."""
+    lens = np.concatenate([np.diff(np.asarray(c.offsets)) for c in chunks])
+    dims = np.unique(lens)
     if len(dims) != 1:
         raise ValueError(
-            f"feature vectors have inconsistent dimensions: {sorted(dims)} "
+            f"feature vectors have inconsistent dimensions: {dims.tolist()} "
             "(all rows must share one dimensionality)"
         )
-    return np.stack([np.asarray(a, dtype=np.float32) for a in arrs])
+    flats = [c.flatten() for c in chunks]
+    flat = flats[0] if len(flats) == 1 else pa.concat_arrays(flats)
+    X = flat.to_numpy(zero_copy_only=False)
+    return X.astype(np.float32, copy=False).reshape(len(lens), int(dims[0]))
 
 
 def batches_to_matrices(
-    batches: Iterator[pd.DataFrame],
+    batches: Iterable[pa.RecordBatch | pd.DataFrame],
     has_weight: bool = False,
     has_base_margin: bool = False,
     has_validation: bool = False,
 ) -> tuple[MatrixBundle, MatrixBundle | None]:
     """Concatenate an Arrow-batch iterator into (train, validation)
     matrix bundles. Validation is None unless has_validation."""
-    parts: list[pd.DataFrame] = [pdf for pdf in batches if len(pdf)]
+    parts = [
+        pa.RecordBatch.from_pandas(b, preserve_index=False) if isinstance(b, pd.DataFrame) else b
+        for b in batches
+    ]
+    parts = [b for b in parts if b.num_rows]
     if not parts:
         empty = MatrixBundle(np.empty((0, 0), np.float32), np.empty(0), None, None)
         return empty, (empty if has_validation else None)
-    pdf = pd.concat(parts, ignore_index=True)
+    table = pa.Table.from_batches(parts)
 
-    def bundle(sub: pd.DataFrame) -> MatrixBundle:
-        X = _stack_features(sub["values"])
-        y = sub["label"].to_numpy(dtype=np.float64) if "label" in sub else np.empty(0)
-        w = sub["weight"].to_numpy(dtype=np.float64) if has_weight else None
-        bm = sub["baseMargin"].to_numpy(dtype=np.float64) if has_base_margin else None
-        return MatrixBundle(X, y, w, bm)
+    def column(name: str) -> np.ndarray:
+        return table.column(name).to_numpy().astype(np.float64, copy=False)
 
+    X = _feature_matrix(table.column("values").chunks)
+    y = column("label") if "label" in table.column_names else np.empty(0)
+    w = column("weight") if has_weight else None
+    bm = column("baseMargin") if has_base_margin else None
     if not has_validation:
-        return bundle(pdf), None
-    mask = pdf["validationIndicator"].astype(bool)
-    return bundle(pdf.loc[~mask]), bundle(pdf.loc[mask])
+        return MatrixBundle(X, y, w, bm), None
+
+    mask = table.column("validationIndicator").fill_null(False).to_numpy(zero_copy_only=False)
+
+    def rows(sel: np.ndarray) -> MatrixBundle:
+        return MatrixBundle(
+            X[sel], y[sel] if len(y) else y,
+            None if w is None else w[sel], None if bm is None else bm[sel],
+        )
+
+    return rows(~mask), rows(mask)

@@ -9,9 +9,10 @@ Re-implements the four public classes of the reference
   or an ``array<numeric>`` column; unwrapped via
   ``pyspark.ml.functions.vector_to_array(..., 'float32')`` exactly as
   the reference does (xgboost_core.py:441),
-* training runs inside ``mapInPandas`` (Arrow batches; reference
-  xgboost_core.py:512-513), single-worker path gathers the partition
-  and calls the kernel (reference O12), multi-worker path uses barrier
+* training runs inside ``mapInArrow`` (the reference used
+  ``mapInPandas``, xgboost_core.py:512-513; the Arrow batches feed the
+  kernel's matrices directly, see data.py), single-worker path gathers
+  the partition and calls the kernel (reference O12), multi-worker path uses barrier
   execution + allGather histogram allreduce (reference O11/O22, see
   tracker.py),
 * inference is an iterator pandas_udf so the model deserializes once
@@ -35,6 +36,7 @@ from typing import Any
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark import cloudpickle, keyword_only
 from pyspark.ml import Estimator, Model
 from pyspark.ml.functions import array_to_vector, vector_to_array
@@ -371,7 +373,7 @@ def _fit_single_worker(
     The init booster ships into the task closure as its JSON string;
     callbacks ride Spark's cloudpickle closure serialization."""
 
-    def train_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def train_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         train_b, val_b = batches_to_matrices(batches, **flags)
         if len(train_b.X) == 0:
             return  # empty partition yields nothing; driver takes first row
@@ -389,9 +391,9 @@ def _fit_single_worker(
             ),
             callbacks=callbacks,
         )
-        yield pd.DataFrame({"model_json": [bst.save_json()]})
+        yield pa.RecordBatch.from_pydict({"model_json": [bst.save_json()]})
 
-    rows = narrowed.repartition(1).mapInPandas(train_fn, "model_json string").collect()
+    rows = narrowed.repartition(1).mapInArrow(train_fn, "model_json string").collect()
     if not rows:
         raise ValueError("cannot fit on an empty dataset")
     return rows[0][0]

@@ -552,6 +552,262 @@ def _chk_flagship_fit_memoized(spark):
     assert m1 is not c1
 
 
+def _chk_arrow_feed_ragged_vectors_raise(spark):
+    """Ragged feature vectors fail the offsets-based dimension check with
+    the same ValueError text, through a fit and straight from the feed
+    (RecordBatches and the pandas entry alike)."""
+    from pyspark.sql import functions as F
+
+    from pyspark_xgboost_spark.ml.data import batches_to_matrices
+
+    df = spark.createDataFrame(
+        [([1.0, 2.0], 0.0), ([1.0, 2.0, 3.0], 1.0)] * 5, ["features", "label"]
+    )
+    with pytest.raises(Exception, match="inconsistent dimensions"):
+        XgboostRegressor(n_estimators=1).fit(df)
+    batches = (
+        df.select(F.col("features").cast("array<float>").alias("values"), "label")
+        .toArrow()
+        .to_batches(max_chunksize=3)
+    )
+    for feed in (batches, [b.to_pandas() for b in batches]):
+        with pytest.raises(ValueError, match=r"inconsistent dimensions: \[2, 3\]"):
+            batches_to_matrices(iter(feed))
+
+
+def _chk_arrow_feed_empty_partitions(spark):
+    """Empty partitions yield no row: a single-worker fit of an input
+    that is empty at run time fails after the job, and an all-empty
+    distributed gang fails in the tasks, each with today's message."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from pyspark_xgboost_spark.ml.data import batches_to_matrices
+
+    df = spark.createDataFrame([(Vectors.dense(1.0, 2.0), 1.0)] * 20, ["features", "label"])
+    # a filter the optimizer cannot prove empty, so tasks really run
+    empty = df.filter(F.col("label") < F.rand(seed=1) - 2.0)
+    with pytest.raises(ValueError, match="cannot fit on an empty dataset"):
+        XgboostRegressor(n_estimators=1).fit(empty)
+    with pytest.raises(Exception, match="all partitions are empty"):
+        XgboostRegressor(n_estimators=1, num_workers=2).fit(empty)
+    zero = pa.RecordBatch.from_pydict(
+        {"values": pa.array([], pa.list_(pa.float32())), "label": pa.array([], pa.float64())}
+    )
+    train_b, val_b = batches_to_matrices(iter([zero, zero]), has_validation=True)
+    assert train_b.X.shape == (0, 0) and len(train_b.y) == 0
+    assert val_b.X.shape == (0, 0)
+
+
+def _chk_arrow_feed_weight_and_validation_split(spark):
+    """The Arrow feed's weight and validationIndicator split equals the
+    per-row construction of the pandas feed it replaced, over several
+    batches and through the pandas entry."""
+    from pyspark_xgboost_spark.ml.data import batches_to_matrices
+
+    rows = [
+        (Vectors.dense(float(i), float(i % 3) / 3), float(i % 5), 1.0 + i % 4, i % 3 == 0)
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, ["features", "label", "w", "isVal"])
+    est = XgboostRegressor(weightCol="w", validationIndicatorCol="isVal")
+    narrowed, flags = est._select_training_columns(df)
+    batches = narrowed.toArrow().to_batches(max_chunksize=7)
+    assert len(batches) > 1
+    pdf = narrowed.toPandas()
+    mask = pdf["validationIndicator"].to_numpy(dtype=bool)
+    for feed in (batches, [b.to_pandas() for b in batches]):
+        train_b, val_b = batches_to_matrices(iter(feed), **flags)
+        for b, sel in ((train_b, ~mask), (val_b, mask)):
+            want_X = np.stack([np.asarray(v, dtype=np.float32) for v in pdf["values"][sel]])
+            np.testing.assert_array_equal(b.X, want_X)
+            assert b.X.dtype == np.float32
+            np.testing.assert_array_equal(b.y, pdf["label"].to_numpy(np.float64)[sel])
+            np.testing.assert_array_equal(b.w, pdf["weight"].to_numpy(np.float64)[sel])
+            assert b.base_margin is None
+
+
+# ---------------------------------------------------------------------------
+# Kernel internals — no Spark session
+# ---------------------------------------------------------------------------
+
+
+def _direct_histograms(codes, g, h, node, n_nodes, nbp1):
+    """(2, n_nodes, f, nbp1) grad/hess sums accumulated row by row."""
+    hist = np.zeros((2, n_nodes, codes.shape[0], nbp1))
+    for j in range(codes.shape[0]):
+        np.add.at(hist[0, :, j], (node, codes[j]), g)
+        np.add.at(hist[1, :, j], (node, codes[j]), h)
+    return hist
+
+
+@pytest.mark.parametrize(
+    "objective,atol",
+    [("reg:squarederror", 0.0), ("binary:logistic", 1e-9), ("multi:softprob", 1e-9)],
+)
+def test_sibling_histograms_match_direct_build(objective, atol):
+    """Histograms derived as parent − built-sibling equal a direct
+    build of every child: exactly for squared error (dyadic gradients,
+    unit hessians), to 1e-9 for the logistic and softmax objectives."""
+    rng = np.random.default_rng(5)
+    n, f, nbp1, n_pairs = 3000, 3, 9, 4
+    codes = rng.integers(0, nbp1, size=(f, n)).astype(np.uint16)
+    child = rng.integers(0, 2 * n_pairs, size=n)
+    if objective == "multi:softprob":
+        obj = kernel._Objective(objective, 3)
+        g, h = obj.grad_hess(rng.normal(size=(n, 3)), rng.integers(0, 3, n).astype(float))
+        g, h = np.ascontiguousarray(g[:, 1]), np.ascontiguousarray(h[:, 1])
+    elif objective == "binary:logistic":
+        obj = kernel._Objective(objective, 0)
+        g, h = obj.grad_hess(rng.normal(size=n), rng.integers(0, 2, n).astype(float))
+    else:
+        obj = kernel._Objective(objective, 0)
+        g, h = obj.grad_hess(np.full(n, 0.5), rng.integers(0, 50, n).astype(float))
+    parent = _direct_histograms(codes, g, h, child // 2, n_pairs, nbp1)
+    want = _direct_histograms(codes, g, h, child, 2 * n_pairs, nbp1)
+    child_H = want[1, :, 0].sum(axis=1)
+    got = kernel._child_histograms(codes, g, h, child, parent, child_H, kernel.LocalComm())
+    if atol == 0.0:
+        np.testing.assert_array_equal(got, want)
+    else:
+        np.testing.assert_allclose(got, want, rtol=0, atol=atol)
+
+
+def test_train_allreduces_once_per_level_built_children_only():
+    """One allreduce_sum per tree level (the rank lock-step), carrying
+    the root and then only one child of each split: half the nodes of
+    every level below the root."""
+    rng = np.random.default_rng(3)
+    X = rng.normal(size=(3000, 4)).astype(np.float32)
+    y = X @ np.array([1.0, -2.0, 0.5, 3.0]) + rng.normal(size=3000)
+    sent = []
+
+    class Recorder(kernel.LocalComm):
+        def allreduce_sum(self, arr):
+            sent.append(arr.shape)
+            return arr
+
+    depth = 4
+    bst = kernel.train(X, y, dict(n_estimators=3, max_depth=depth, max_bin=16), comm=Recorder())
+    expected, all_nodes = [], 0
+    for t in bst.trees:
+        level = [0]
+        expected.append(1)
+        for _ in range(1, depth):
+            level = [c for i in level if t.feature[i] >= 0 for c in (t.left[i], t.right[i])]
+            if not level:
+                break
+            expected.append(len(level) // 2)
+            all_nodes += len(level)
+    assert len(sent) == len(bst.trees) * depth  # fully grown: one round per level
+    assert [s[1] for s in sent] == expected
+    assert all(s[0] == 2 and s[2] == 4 for s in sent)
+    assert sum(expected) - len(bst.trees) == all_nodes // 2
+
+
+def _random_tree(rng, n_features, depth):
+    """A random tree; child ids are sometimes allocated right first, so
+    nothing may assume ``right == left + 1``."""
+    t = kernel._Tree()
+
+    def grow(node, d):
+        if d == depth or rng.random() < 0.2:
+            t.value[node] = float(rng.normal())
+            return
+        t.feature[node] = int(rng.integers(n_features))
+        t.threshold[node] = float(rng.normal())
+        t.default_left[node] = bool(rng.random() < 0.5)
+        a, b = t.add_node(), t.add_node()
+        if rng.random() < 0.5:
+            a, b = b, a
+        t.left[node], t.right[node] = a, b
+        grow(a, d + 1)
+        grow(b, d + 1)
+
+    grow(t.add_node(), 0)
+    return t
+
+
+def _walk_row(t, x, missing):
+    i = 0
+    while t.feature[i] >= 0:
+        v = float(x[t.feature[i]])
+        if np.isnan(v) or v == missing:
+            i = t.left[i] if t.default_left[i] else t.right[i]
+        else:
+            i = t.left[i] if v < t.threshold[i] else t.right[i]
+    return t.value[i]
+
+
+@pytest.mark.parametrize("missing", [float("nan"), 0.0])
+def test_level_synchronous_predict_matches_row_traversal(missing):
+    """The compiled level-by-level walk lands every row on the leaf a
+    per-row traversal reaches, NaN and the ``missing`` value following
+    the default direction; the Booster maps ``missing`` once for all
+    trees."""
+    rng = np.random.default_rng(11)
+    X = rng.normal(size=(400, 5)).astype(np.float32)
+    X[rng.random(X.shape) < 0.1] = np.nan
+    X[rng.random(X.shape) < 0.1] = 0.0
+    trees = [_random_tree(rng, 5, depth=int(rng.integers(0, 6))) for _ in range(12)]
+    want = [np.array([_walk_row(t, x, missing) for x in X]) for t in trees]
+    for t, w in zip(trees, want):
+        np.testing.assert_array_equal(t.predict_margin(X, missing), w)
+    bst = kernel.Booster(trees, "reg:squarederror", 0, 0.0, missing)
+    np.testing.assert_allclose(bst.predict(X), np.sum(want, axis=0), rtol=0, atol=1e-12)
+
+
+@pytest.mark.parametrize("objective", ["reg:squarederror", "multi:softprob"])
+def test_two_rank_loopback_training_matches_local(objective):
+    """Shards trained over a 2-rank loopback ``build_tree_comm`` give the
+    single-process booster within 1e-9 on every rank."""
+    import threading
+
+    from pyspark_xgboost_spark.ml.comm import build_tree_comm
+
+    rng = np.random.default_rng(2)
+    X = rng.normal(size=(4000, 4)).astype(np.float32)
+    X[rng.random(X.shape) < 0.05] = np.nan
+    score = np.nan_to_num(X) @ np.array([1.0, -1.0, 2.0, 0.5])
+    if objective == "multi:softprob":
+        y = np.digitize(score, [-1.0, 1.0]).astype(float)
+        params = dict(objective=objective, num_class=3, n_estimators=5, max_depth=4)
+    else:
+        y = score + rng.normal(size=len(X))
+        params = dict(objective=objective, n_estimators=8, max_depth=4)
+    local = kernel.train(X, y, params)
+    shards = [slice(0, 1500), slice(1500, None)]
+    out, errors = {}, []
+
+    def rank(r):
+        try:
+            comm = build_tree_comm(
+                r, 2, ["127.0.0.1"] * 2, f"kernel-parity-{objective}", 2, deadline_s=30
+            )
+            out[r] = kernel.train(X[shards[r]], y[shards[r]], params, comm=comm)
+            comm.close()
+        except Exception as e:  # noqa: BLE001 — re-raised below
+            errors.append(e)
+
+    peer = threading.Thread(target=rank, args=(1,))
+    peer.start()
+    rank(0)
+    peer.join(timeout=60)
+    assert not peer.is_alive() and not errors, errors
+    want = local.predict(X)
+    for r in (0, 1):
+        np.testing.assert_allclose(out[r].predict(X), want, rtol=0, atol=1e-9)
+
+
+def test_bin_edge_sample_spans_whole_shard():
+    """Above ``sample_rows`` the bin-edge sample is evenly spaced over
+    the whole shard: a feature sorted ascending over 1.5x the sample
+    size gets cuts spanning its full range, not just the first rows."""
+    X = np.arange(1500, dtype=np.float32)[:, None]
+    (cuts,) = kernel.compute_bin_edges(X, max_bin=16, sample_rows=1000)
+    assert cuts[0] < 150 and cuts[-1] > 1350
+
+
 # Pooled contract sweep (smoke-sweep discipline; see test_plans_r11):
 # every Spark-backed ML behavioral test fans out over the shared
 # session in one case — fits are independent jobs the scheduler
@@ -590,6 +846,9 @@ def test_ml_contracts_pooled(spark, reg_train, cls_train):
         (_chk_use_gpu_param, []),
         (_chk_quantile_and_mae_objectives_reach_kernel, []),
         (_chk_flagship_fit_memoized, []),
+        (_chk_arrow_feed_ragged_vectors_raise, []),
+        (_chk_arrow_feed_empty_partitions, []),
+        (_chk_arrow_feed_weight_and_validation_split, []),
     ]:
         def wrap(s, fn=fn, extra=extra):
             args = [

@@ -175,38 +175,49 @@ def test_blocked_er_vocab_pull_is_bounded(spark):
 def test_stream_inner_join_identical_without_no_data_batch(spark):
     """The inner stream-stream join emits every match in its data
     batch: eliding the trailing no-data batch (r15) must not change
-    the emitted row multiset."""
+    the emitted row multiset. The legacy run keeps the no-data batch
+    ON; both runs leave the session conf as they found it."""
     from pyspark_xgboost_spark.streaming.stream import (
+        _NO_DATA_BATCH_CONF,
+        _click_purchase_join,
+        _run_to_memory,
         events_stream_stream_join,
     )
 
-    fast = _rows(
-        events_stream_stream_join(spark, SF_DIR),
-        "click_id",
-        "purchase_id",
-        "user_id",
+    cols = ("click_id", "purchase_id", "user_id")
+    before = spark.conf.get(_NO_DATA_BATCH_CONF, None)
+    assert before in (None, "true")  # the legacy run really has the batch
+    fast = events_stream_stream_join(spark, SF_DIR)
+    assert spark.conf.get(_NO_DATA_BATCH_CONF, None) == before
+    legacy = _run_to_memory(
+        _click_purchase_join(spark, SF_DIR), "append", no_data_batch=True
     )
-    prev = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
+    assert spark.conf.get(_NO_DATA_BATCH_CONF, None) == before
+    fast_rows = _rows(fast, *cols)
+    assert fast_rows and fast_rows == _rows(legacy, *cols)
+
+
+def test_stream_query_leaves_unset_no_data_batch_conf_unset(spark):
+    """A stream query that pins the no-data-batch conf off restores an
+    UNSET session conf as unset, not as an explicit 'true'."""
+    from pyspark_xgboost_spark.streaming.stream import (
+        _NO_DATA_BATCH_CONF,
+        events_stream_stream_join,
     )
+
+    prev = spark.conf.get(_NO_DATA_BATCH_CONF, None)
+    spark.conf.unset(_NO_DATA_BATCH_CONF)
     try:
-        # force the legacy no-data batch back ON around the query: the
-        # query-local override must still win (it pins the conf around
-        # start()), and the result must be identical either way
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-        )
-        again = _rows(
-            events_stream_stream_join(spark, SF_DIR),
-            "click_id",
-            "purchase_id",
-            "user_id",
-        )
+        events_stream_stream_join(spark, SF_DIR).count()
+        assert spark.conf.get(_NO_DATA_BATCH_CONF, None) is None
+        spark.conf.set(_NO_DATA_BATCH_CONF, "true")
+        events_stream_stream_join(spark, SF_DIR).count()
+        assert spark.conf.get(_NO_DATA_BATCH_CONF, None) == "true"
     finally:
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev
-        )
-    assert fast == again
+        if prev is None:
+            spark.conf.unset(_NO_DATA_BATCH_CONF)
+        else:
+            spark.conf.set(_NO_DATA_BATCH_CONF, prev)
 
 
 def test_stream_input_bytes_recursive_hadoop_fs(spark, tmp_path):
