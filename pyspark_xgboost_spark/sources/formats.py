@@ -18,20 +18,27 @@ downstream.
 
 from __future__ import annotations
 
+import ast
 import contextlib as _contextlib
 import fcntl as _fcntl
 import itertools
+import json
 import os
 import shutil
+import tempfile
 import threading as _threading
+import time
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 
 from pyspark_xgboost_spark.registry import register
 from pyspark_xgboost_spark.sources import load_table
+from pyspark_xgboost_spark.utils import scoped_conf
 
 _SINK_COUNTER = itertools.count()
 
@@ -551,9 +558,9 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
         with build_lock(out):
             if not os.path.exists(marker):
                 li.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
-                prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-                try:
+                with scoped_conf(
+                    spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+                ):
                     # backfill: replace ONLY the R partition (even orderkeys)
                     (
                         li.filter((F.col("l_returnflag") == "R") & (F.col("l_orderkey") % 2 == 0))
@@ -561,8 +568,6 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
                         .partitionBy("l_returnflag")
                         .parquet(out)
                     )
-                finally:
-                    spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
                 with open(marker, "w") as fh:
                     fh.write("ok")
     back = spark.read.parquet(out)
@@ -1065,6 +1070,55 @@ def scan_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _docbin_file_idx(progress: StreamingQueryProgress | None) -> int:
+    """Shard index the last committed batch's endOffset reached, -1
+    before the first commit. The offset arrives as a dict or as a
+    string: JSON, or a Python-dict repr that only ``ast`` parses."""
+    if not progress or not progress.get("sources"):
+        return -1
+    off = progress["sources"][0].get("endOffset")
+    if isinstance(off, str):
+        try:
+            off = json.loads(off)
+        except ValueError:
+            off = ast.literal_eval(off)
+    return int(off.get("file_idx", -1)) if off else -1
+
+
+def _run_docbin_stream(
+    writer: DataStreamWriter, n_files: int, query: str, partial: str
+) -> None:
+    """Run a docbin-sourced stream ``writer`` until a COMMITTED batch's
+    endOffset covers the last of ``n_files`` shards. availableNow
+    snapshots only the reader's ONE prefetched batch, so it would stop
+    after the first ``batchfiles`` shards; a 0 s processing trigger
+    keeps firing micro-batches instead. However the call ends, the
+    query is stopped and its throwaway checkpoint removed. A query
+    that fails raises its own error; one that has not got there by the
+    deadline raises TimeoutError, which names ``query`` and
+    ``partial``, the use of a partial stream it refuses."""
+    with tempfile.TemporaryDirectory(prefix="docbin_ckpt_") as ckpt:
+        q = (
+            writer.option("checkpointLocation", ckpt)
+            .trigger(processingTime="0 seconds")
+            .start()
+        )
+        try:
+            deadline = time.time() + 120
+            while _docbin_file_idx(q.lastProgress) < n_files:
+                if not q.isActive:
+                    q.awaitTermination()  # re-raises the query's failure
+                if time.time() >= deadline:
+                    raise TimeoutError(
+                        f"{query}: stream did not reach "
+                        f"file_idx={n_files} within the deadline — failing "
+                        f"loudly rather than {partial}"
+                    )
+                time.sleep(0.02)
+        finally:
+            q.stop()
+
+
 @register(
     "scan_python_datasource_stream",
     oracle="""
@@ -1089,8 +1143,6 @@ def scan_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame
     per run keeps the query re-runnable."""
     if not _HAS_PY_DATASOURCE:  # pragma: no cover
         raise NotImplementedError("requires Spark 4 Python DataSource API")
-    import tempfile
-
     path = _stage_docbin(sf_dir)
     _register_docbin(spark)
     docs = (
@@ -1100,51 +1152,13 @@ def scan_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame
         .load()
     )
     name = f"docbin_stream_sink_{next(_SINK_COUNTER)}"
-    ckpt = tempfile.mkdtemp(prefix="docbin_ckpt_")
     n_files = sum(1 for f in os.listdir(path) if f.endswith(".docbin"))
-    # availableNow snapshots only the reader's ONE prefetched batch, so
-    # it would stop after the first 4 shards; a 0s processing trigger
-    # keeps firing micro-batches and the loop stops the query once a
-    # COMMITTED batch's endOffset covers the last shard.
-    q = (
-        docs.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime="0 seconds")
-        .start()
+    _run_docbin_stream(
+        docs.writeStream.outputMode("append").format("memory").queryName(name),
+        n_files,
+        "scan_python_datasource_stream",
+        "aggregating a partial read",
     )
-    import json as _json
-    import time as _time
-
-    deadline = _time.time() + 120
-    while _time.time() < deadline:
-        p = q.lastProgress
-        if p and p.get("sources"):
-            eo = p["sources"][0].get("endOffset")
-            if eo is not None:
-                if isinstance(eo, str):
-                    # serialized as a Python-dict repr, not strict JSON
-                    try:
-                        off = _json.loads(eo)
-                    except ValueError:
-                        import ast as _ast
-
-                        off = _ast.literal_eval(eo)
-                else:
-                    off = eo
-                if int(off.get("file_idx", -1)) >= n_files:
-                    break
-        _time.sleep(0.02)
-    else:
-        q.stop()
-        raise TimeoutError(
-            "scan_python_datasource_stream: stream did not reach "
-            f"file_idx={n_files} within the deadline — failing loudly "
-            "rather than aggregating a partial read"
-        )
-    q.stop()
-    q.awaitTermination()
     return spark.table(name).groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_chars").alias("sum_chars"),
@@ -1980,15 +1994,10 @@ def sink_python_datasource_stream_write(spark: SparkSession, sf_dir: str) -> Dat
     checkpoint + sink dir per run keep the query rerunnable."""
     if not _HAS_PY_DATASOURCE:  # pragma: no cover
         raise NotImplementedError("requires Spark 4 Python DataSource API")
-    import ast as _ast
-    import tempfile
-    import time as _time
-
     src_path = _stage_docbin(sf_dir)
     _register_docbin(spark)
     n_files = sum(1 for f in os.listdir(src_path) if f.endswith(".docbin"))
     out = tempfile.mkdtemp(prefix="docbin_stream_out_")
-    ckpt = tempfile.mkdtemp(prefix="docbin_stream_out_ckpt_")
     docs = (
         spark.readStream.format("docbin")
         .option("path", src_path)
@@ -2000,33 +2009,12 @@ def sink_python_datasource_stream_write(spark: SparkSession, sf_dir: str) -> Dat
         .option("batchfiles", str(_DOCBIN_SHARDS))
         .load()
     )
-    q = (
-        docs.writeStream.format("docbin")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(processingTime="0 seconds")
-        .start()
+    _run_docbin_stream(
+        docs.writeStream.format("docbin").option("path", out).outputMode("append"),
+        n_files,
+        "sink_python_datasource_stream_write",
+        "attesting a partial sink",
     )
-    deadline = _time.time() + 120
-    while _time.time() < deadline:
-        p = q.lastProgress
-        if p and p.get("sources"):
-            eo = p["sources"][0].get("endOffset")
-            if eo is not None:
-                off = _ast.literal_eval(eo) if isinstance(eo, str) else eo
-                if off and int(off.get("file_idx", -1)) >= n_files:
-                    break
-        _time.sleep(0.02)
-    else:
-        q.stop()
-        raise TimeoutError(
-            "sink_python_datasource_stream_write: stream did not reach "
-            f"file_idx={n_files} within the deadline — failing loudly "
-            "rather than attesting a partial sink"
-        )
-    q.stop()
-    q.awaitTermination()
     back = spark.read.format("docbin").option("path", out).load()
     return back.groupBy("source").agg(
         F.count("*").alias("n_docs"),

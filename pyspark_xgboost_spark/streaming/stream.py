@@ -18,19 +18,22 @@ from __future__ import annotations
 
 import itertools
 import os
-from collections.abc import Iterator
+import tempfile
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from pyspark_xgboost_spark.registry import register
 from pyspark_xgboost_spark.sources.formats import TMP_NS, build_lock
 from pyspark_xgboost_spark.sources import normalize_event_ts
 from pyspark_xgboost_spark.streaming.windows import session_agg, tumbling_agg
+from pyspark_xgboost_spark.utils import scoped_conf
 
 _counter = itertools.count()
 
@@ -112,7 +115,7 @@ def _state_partitions(spark: SparkSession) -> int:
     per pass locally vs ~0.2s of actual aggregation (re-measured r14:
     the stream-stream join runs 6.7s at 8 partitions vs 3.5s at 4 on
     the same input). The partition count is DERIVED FROM THE SOURCE
-    INPUT SIZE (one store per ~64 MB of input, floor 4) when the
+    INPUT SIZE (one store per ~64 MB of input, floor 2) when the
     stream reader has recorded it on the session — the state-bytes /
     store sizing a real deployment does, since the count is pinned in
     the checkpoint for the life of the query — capped at 32x the
@@ -162,6 +165,41 @@ def _record_stream_input_bytes(spark: SparkSession, path: str) -> None:
 _NO_DATA_BATCH_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 
+def _drain(
+    writer: DataStreamWriter,
+    spark: SparkSession,
+    confs: dict[str, str] | None = None,
+    checkpoint: str | None = None,
+) -> None:
+    """Run a configured stream writer to completion — the one place
+    that knows how a query here is run: one ``availableNow`` pass over
+    all input, ``confs`` scoped to the query (it reads them at start),
+    and a throwaway checkpoint directory removed on success AND on
+    failure unless the caller passes a ``checkpoint`` that must persist
+    (an exactly-once sink's). A wait interrupted while the query still
+    runs stops it, so no stream outlives the call."""
+    try:
+        with scoped_conf(spark, confs or {}), tempfile.TemporaryDirectory(
+            prefix="stream_ckpt_"
+        ) as tmp:
+            q = (
+                writer.option("checkpointLocation", checkpoint or tmp)
+                .trigger(availableNow=True)
+                .start()
+            )
+            try:
+                q.awaitTermination()
+            finally:
+                if q.isActive:  # interrupted while the query still runs
+                    q.stop()
+    finally:
+        # clear the recorded source size: a later streaming op that
+        # runs without recording its own source must fall back to the
+        # cores/4 default, not inherit THIS query's input size
+        # (cross-query leak — r14 advice)
+        spark.conf.unset(_STREAM_INPUT_BYTES_CONF)
+
+
 def _run_to_memory(
     out: DataFrame,
     mode: str,
@@ -172,9 +210,9 @@ def _run_to_memory(
     return the sink table (one availableNow pass = all input files).
 
     The shuffle-partition conf is pinned query-local: a streaming query
-    reads it once at start (and stores it in the checkpoint), so setting
-    it around start() scopes it to this query without touching the
-    session's batch default.
+    reads it once at start (and stores it in the checkpoint), so
+    scoping it around start() scopes it to this query without touching
+    the session's batch default.
 
     ``no_data_batch=False`` turns off
     ``spark.sql.streaming.noDataMicroBatches.enabled`` for this query
@@ -190,9 +228,6 @@ def _run_to_memory(
     catch."""
     name = f"stream_sink_{next(_counter)}"
     spark = out.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    # None when unset: restored as unset, not as an explicit default
-    prev_ndb = spark.conf.get(_NO_DATA_BATCH_CONF, None)
     # min_parts: compute-bound Python state kernels
     # (applyInPandasWithState) want one slot per store regardless of
     # input volume — their cost is the kernel, not the store commit
@@ -201,32 +236,14 @@ def _run_to_memory(
     parts = _state_partitions(spark)
     if min_parts:
         parts = max(parts, min_parts)
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    confs = {"spark.sql.shuffle.partitions": str(parts)}
     if not no_data_batch:
-        spark.conf.set(_NO_DATA_BATCH_CONF, "false")
-    try:
-        q = (
-            out.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if prev_ndb is None:
-            spark.conf.unset(_NO_DATA_BATCH_CONF)
-        else:
-            spark.conf.set(_NO_DATA_BATCH_CONF, prev_ndb)
-        # clear the recorded source size: a later streaming op that
-        # runs without recording its own source must fall back to the
-        # cores/4 default, not inherit THIS query's input size
-        # (cross-query leak — r14 advice)
-        try:
-            spark.conf.unset(_STREAM_INPUT_BYTES_CONF)
-        except Exception:  # pragma: no cover — advisory cleanup only
-            pass
+        confs[_NO_DATA_BATCH_CONF] = "false"
+    _drain(
+        out.writeStream.outputMode(mode).format("memory").queryName(name),
+        spark,
+        confs,
+    )
     return spark.table(name)
 
 
@@ -443,25 +460,15 @@ def events_stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = os.path.join(parent, f"tumbling_{fp}")
     ckpt_dir = os.path.join(parent, f"ckpt_{fp}")
     ev = read_events_stream(spark, sf_dir).withWatermark("ts", "2 hours")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_state_partitions(spark)))
-    try:
-        q = (
-            tumbling_agg(ev)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        try:
-            spark.conf.unset(_STREAM_INPUT_BYTES_CONF)
-        except Exception:  # pragma: no cover — advisory cleanup only
-            pass
+    _drain(
+        tumbling_agg(ev)
+        .writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", out_dir),
+        spark,
+        {"spark.sql.shuffle.partitions": str(_state_partitions(spark))},
+        checkpoint=ckpt_dir,
+    )
     return spark.read.parquet(out_dir)
 
 
@@ -535,7 +542,6 @@ def events_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials re-aggregate to exactly the batch answer regardless of how
     the input was micro-batched."""
     import shutil as _shutil
-    import tempfile
 
     key = sf_dir.strip("/").replace("/", "_")
     out_dir = os.path.join("/tmp", f"spark_stream_sink{TMP_NS}", key, "foreach_parts")
@@ -554,22 +560,11 @@ def events_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     ev = read_events_stream(spark, sf_dir)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_state_partitions(spark)))
-    try:
-        q = (
-            ev.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="fb_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        try:
-            spark.conf.unset(_STREAM_INPUT_BYTES_CONF)
-        except Exception:  # pragma: no cover — advisory cleanup only
-            pass
+    _drain(
+        ev.writeStream.foreachBatch(write_batch),
+        spark,
+        {"spark.sql.shuffle.partitions": str(_state_partitions(spark))},
+    )
     back = spark.read.parquet(out_dir)
     return back.groupBy("event_type").agg(
         F.sum("n").alias("n"), F.sum("sum_cents").alias("sum_cents")
@@ -1010,18 +1005,11 @@ def events_stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(os.path.join(root, "in"))
     )
     ev = normalize_event_ts(raw).withWatermark("ts", "2 hours")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_state_partitions(spark)))
-    try:
-        agg = ev.groupBy(
-            F.window("ts", "1 hour").alias("w"), "event_type"
-        ).agg(F.count("*").alias("n"))
-        out = agg.select(
-            F.col("w.start").alias("w_start"), "event_type", "n"
-        )
-        return _run_to_memory(out, "append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    agg = ev.groupBy(
+        F.window("ts", "1 hour").alias("w"), "event_type"
+    ).agg(F.count("*").alias("n"))
+    out = agg.select(F.col("w.start").alias("w_start"), "event_type", "n")
+    return _run_to_memory(out, "append")
 
 
 def _stage_seq_batches(
@@ -1073,6 +1061,32 @@ def _stage_seq_batches(
                 with open(done, "w") as fh:
                     fh.write("ok")
     return root
+
+
+def _fold_seq_stream(
+    spark: SparkSession,
+    root: str,
+    schema: str,
+    fn: Callable[[DataFrame, int], None],
+) -> None:
+    """Fold ``fn(batch_df, batch_id)`` over the ordered batches that
+    _stage_seq_batches staged under ``root/in``: one file per
+    micro-batch, so batch ids follow the staged sequence, and ``fn``
+    sees only non-empty batches. The fold's state lives wherever
+    ``fn`` writes it; the query itself is stateless, and its
+    checkpoint is throwaway (see _drain)."""
+
+    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            fn(batch_df, batch_id)
+
+    _drain(
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(os.path.join(root, "in"))
+        .writeStream.foreachBatch(on_batch),
+        spark,
+    )
 
 
 def _stage_merge_batches(spark: SparkSession, sf_dir: str) -> str:
@@ -1167,15 +1181,12 @@ def _build_merge_chain(
     """Run the 3-batch foreachBatch MERGE and leave the versioned
     copy-on-write chain under ``tbl`` (marker names the final version)."""
     import shutil
-    import tempfile
 
     shutil.rmtree(tbl, ignore_errors=True)
     os.makedirs(tbl)
     state: dict[str, Any] = {"cur": None}
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         # within-batch LWW on the merge key (defensive: each staged
         # file carries one seq, but a MERGE must be key-unique)
         b = batch_df.groupBy("doc_id").agg(F.max("seq").alias("seq"))
@@ -1205,16 +1216,7 @@ def _build_merge_chain(
         merged.write.mode("overwrite").parquet(nxt)
         state["cur"] = nxt
 
-    q = (
-        spark.readStream.schema("doc_id long, seq int")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(root, "in"))
-        .writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="merge_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _fold_seq_stream(spark, root, "doc_id long, seq int", merge_batch)
     with open(final_marker, "w") as fh:
         fh.write(state["cur"])
 
@@ -1733,7 +1735,6 @@ def stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs within a batch are the batch's own (small) dedup problem,
     settled separately, exactly like dedup_incremental_batch."""
     import shutil
-    import tempfile
 
     from pyspark_xgboost_spark.operators.dedup import _MH_BUCKET_CAP, _band_rows
 
@@ -1749,8 +1750,6 @@ def stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 state: dict[str, Any] = {"has_index": False, "has_pairs": False}
 
                 def probe_and_update(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
                     sess = batch_df.sparkSession
                     bands = _band_rows(batch_df.select("doc_id", "text")).join(
                         batch_df.select("doc_id", "seq"), "doc_id"
@@ -1794,16 +1793,9 @@ def stream_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ).parquet(idx_dir)
                     state["has_index"] = True
 
-                q = (
-                    spark.readStream.schema("doc_id long, text string, seq int")
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(probe_and_update)
-                    .option("checkpointLocation", tempfile.mkdtemp(prefix="nd_ckpt_"))
-                    .trigger(availableNow=True)
-                    .start()
+                _fold_seq_stream(
+                    spark, root, "doc_id long, text string, seq int", probe_and_update
                 )
-                q.awaitTermination()
                 with open(final_marker, "w") as fh:
                     fh.write("pairs" if state["has_pairs"] else "empty")
     with open(final_marker) as fh:
@@ -1903,7 +1895,6 @@ def stream_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     set as history accretes for years). The streaming query itself is
     stateless — state lives in the dimension."""
     import shutil
-    import tempfile
 
     root = _stage_merge_batches(spark, sf_dir)
     tbl = os.path.join(root, "scd2")
@@ -1916,8 +1907,6 @@ def stream_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 state: dict[str, Any] = {"open": None, "closed": []}
 
                 def scd2_merge(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
                     sess = batch_df.sparkSession
                     b = (
                         batch_df.groupBy("doc_id")
@@ -1984,16 +1973,9 @@ def stream_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                         newly_closed.write.mode("overwrite").parquet(cl)
                         state["closed"].append(cl)
 
-                q = (
-                    spark.readStream.schema("doc_id long, seq int")
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(scd2_merge)
-                    .option("checkpointLocation", tempfile.mkdtemp(prefix="scd2_ckpt_"))
-                    .trigger(availableNow=True)
-                    .start()
+                _fold_seq_stream(
+                    spark, root, "doc_id long, seq int", scd2_merge
                 )
-                q.awaitTermination()
                 with open(final_marker, "w") as fh:
                     fh.write(state["open"] + "\n" + "\n".join(state["closed"]))
     with open(final_marker) as fh:
@@ -2070,7 +2052,6 @@ def stream_decontaminate_incremental(
     positions only, never a corpus re-scan. The output is append-only
     per batch."""
     import shutil
-    import tempfile
 
     from pyspark_xgboost_spark.operators.corpus import _DECON_N, _TOKS
 
@@ -2116,8 +2097,6 @@ def stream_decontaminate_incremental(
                 ).parquet(idx_dir)
 
                 def probe_batch(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
                     sess = batch_df.sparkSession
                     t = batch_df.select(
                         "doc_id", "seq", F.expr(_TOKS).alias("toks")
@@ -2176,16 +2155,9 @@ def stream_decontaminate_incremental(
                         .parquet(out_dir)
                     )
 
-                q = (
-                    spark.readStream.schema("doc_id long, text string, seq int")
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(probe_batch)
-                    .option("checkpointLocation", tempfile.mkdtemp(prefix="dc_ckpt_"))
-                    .trigger(availableNow=True)
-                    .start()
+                _fold_seq_stream(
+                    spark, root, "doc_id long, text string, seq int", probe_batch
                 )
-                q.awaitTermination()
                 with open(final_marker, "w") as fh:
                     fh.write("ok")
     return spark.read.parquet(out_dir)
@@ -2287,7 +2259,6 @@ def stream_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch-sized tables (groups x m rows max). The streaming query is
     stateless — state lives in the sketch table."""
     import shutil
-    import tempfile
 
     from pyspark_xgboost_spark.operators.sketches import (
         hll_registers,
@@ -2307,8 +2278,6 @@ def stream_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 state: dict[str, Any] = {"cur": None}
 
                 def merge_regs(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
                     sess = batch_df.sparkSession
                     b = hll_registers(
                         batch_df.select(
@@ -2327,21 +2296,9 @@ def stream_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                     b.write.mode("overwrite").parquet(nxt)
                     state["cur"] = nxt
 
-                q = (
-                    spark.readStream.schema(
-                        "event_type string, user_id long, seq int"
-                    )
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(merge_regs)
-                    .option(
-                        "checkpointLocation",
-                        tempfile.mkdtemp(prefix="hll_ckpt_"),
-                    )
-                    .trigger(availableNow=True)
-                    .start()
+                _fold_seq_stream(
+                    spark, root, "event_type string, user_id long, seq int", merge_regs
                 )
-                q.awaitTermination()
                 with open(final_marker, "w") as fh:
                     fh.write(state["cur"])
     with open(final_marker) as fh:
@@ -2431,7 +2388,6 @@ def stream_kmeans_minibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     The streaming query is stateless — state lives in the centroid
     table."""
     import shutil
-    import tempfile
 
     from pyspark_xgboost_spark.operators.similarity import (
         _KM_K,
@@ -2454,8 +2410,6 @@ def stream_kmeans_minibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 state: dict[str, Any] = {"cur": None}
 
                 def km_update(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
                     sess = batch_df.sparkSession
                     xq = batch_df.select("vec_id", quant.alias("q"))
                     if state["cur"] is None:
@@ -2522,21 +2476,12 @@ def stream_kmeans_minibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
                     nxt_df.write.mode("overwrite").parquet(nxt)
                     state["cur"] = nxt
 
-                q = (
-                    spark.readStream.schema(
-                        "vec_id long, embedding array<double>, seq int"
-                    )
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(km_update)
-                    .option(
-                        "checkpointLocation",
-                        tempfile.mkdtemp(prefix="km_ckpt_"),
-                    )
-                    .trigger(availableNow=True)
-                    .start()
+                _fold_seq_stream(
+                    spark,
+                    root,
+                    "vec_id long, embedding array<double>, seq int",
+                    km_update,
                 )
-                q.awaitTermination()
                 with open(final_marker, "w") as fh:
                     fh.write(state["cur"])
     with open(final_marker) as fh:
@@ -2749,7 +2694,6 @@ def stream_reservoir_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sources x {_WRSI_K} rows each) and re-ranks. The streaming query
     is stateless — state lives in the reservoir table."""
     import shutil
-    import tempfile
 
     from pyspark_xgboost_spark.sources.formats import build_lock
 
@@ -2764,8 +2708,6 @@ def stream_reservoir_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 state: dict[str, Any] = {"cur": None}
 
                 def merge_sample(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
                     sess = batch_df.sparkSession
                     cand = _wrsi_topk(
                         _wrsi_key_cols(
@@ -2779,21 +2721,12 @@ def stream_reservoir_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                     cand.write.mode("overwrite").parquet(nxt)
                     state["cur"] = nxt
 
-                q = (
-                    spark.readStream.schema(
-                        "doc_id long, source string, n_chars long, seq int"
-                    )
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(merge_sample)
-                    .option(
-                        "checkpointLocation",
-                        tempfile.mkdtemp(prefix="wrsi_ckpt_"),
-                    )
-                    .trigger(availableNow=True)
-                    .start()
+                _fold_seq_stream(
+                    spark,
+                    root,
+                    "doc_id long, source string, n_chars long, seq int",
+                    merge_sample,
                 )
-                q.awaitTermination()
                 with open(final_marker, "w") as fh:
                     fh.write(state["cur"])
     with open(final_marker) as fh:
@@ -2901,7 +2834,6 @@ def stream_ddsketch_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     state lives in the sketch table, O(KB) per group forever, and
     reading "p99 so far" never rescans history."""
     import shutil
-    import tempfile
 
     from pyspark_xgboost_spark.operators.sketches import (
         _DD_INV_ALPHA,
@@ -2920,8 +2852,6 @@ def stream_ddsketch_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 state: dict[str, Any] = {"cur": None}
 
                 def merge_counters(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
                     sess = batch_df.sparkSession
                     b = _dds_bucketize(batch_df)
                     if state["cur"] is not None:
@@ -2935,21 +2865,12 @@ def stream_ddsketch_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                     b.write.mode("overwrite").parquet(nxt)
                     state["cur"] = nxt
 
-                q = (
-                    spark.readStream.schema(
-                        "event_type string, value double, seq int"
-                    )
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(merge_counters)
-                    .option(
-                        "checkpointLocation",
-                        tempfile.mkdtemp(prefix="dds_ckpt_"),
-                    )
-                    .trigger(availableNow=True)
-                    .start()
+                _fold_seq_stream(
+                    spark,
+                    root,
+                    "event_type string, value double, seq int",
+                    merge_counters,
                 )
-                q.awaitTermination()
                 with open(final_marker, "w") as fh:
                     fh.write(state["cur"])
     with open(final_marker) as fh:
@@ -3100,7 +3021,6 @@ def stream_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     read broadcasts the tiny (queries x nprobe) probe set into a hash
     join against the cell-keyed postings."""
     import shutil
-    import tempfile
 
     from pyspark_xgboost_spark.operators.similarity import (
         _IVF_NPROBE,
@@ -3126,8 +3046,6 @@ def stream_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.makedirs(tbl)
 
                 def ivf_append(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
                     sess = batch_df.sparkSession
                     xq = batch_df.select("vec_id", quant.alias("q"))
                     if not os.path.exists(cent_dir):
@@ -3150,21 +3068,12 @@ def stream_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                         .parquet(post_dir)
                     )
 
-                q = (
-                    spark.readStream.schema(
-                        "vec_id long, embedding array<double>, seq int"
-                    )
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(ivf_append)
-                    .option(
-                        "checkpointLocation",
-                        tempfile.mkdtemp(prefix="ivfp_ckpt_"),
-                    )
-                    .trigger(availableNow=True)
-                    .start()
+                _fold_seq_stream(
+                    spark,
+                    root,
+                    "vec_id long, embedding array<double>, seq int",
+                    ivf_append,
                 )
-                q.awaitTermination()
                 with open(final_marker, "w") as fh:
                     fh.write("ok")
     postings = spark.read.parquet(post_dir)
@@ -3364,7 +3273,6 @@ def stream_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     The streaming query is stateless — state lives in the label
     table."""
     import shutil
-    import tempfile
 
     from pyspark_xgboost_spark.operators.dedup import (
         _min_label_components,
@@ -3382,8 +3290,6 @@ def stream_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 state: dict[str, Any] = {"cur": None}
 
                 def cc_update(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
                     sess = batch_df.sparkSession
                     e = batch_df.select("doc_a", "doc_b")
                     nodes = (
@@ -3443,21 +3349,9 @@ def stream_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                     relabeled.write.mode("overwrite").parquet(nxt)
                     state["cur"] = nxt
 
-                q = (
-                    spark.readStream.schema(
-                        "doc_a long, doc_b long, seq int"
-                    )
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(cc_update)
-                    .option(
-                        "checkpointLocation",
-                        tempfile.mkdtemp(prefix="cc_ckpt_"),
-                    )
-                    .trigger(availableNow=True)
-                    .start()
+                _fold_seq_stream(
+                    spark, root, "doc_a long, doc_b long, seq int", cc_update
                 )
-                q.awaitTermination()
                 with open(final_marker, "w") as fh:
                     fh.write(state["cur"])
     with open(final_marker) as fh:
@@ -3568,7 +3462,6 @@ def stream_mg_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows shrinking to k; the streaming query is stateless (state lives
     in the k-row summary table, copy-on-write versioned)."""
     import shutil
-    import tempfile
 
     from pyspark_xgboost_spark.operators.corpus import _TOKS
     from pyspark_xgboost_spark.sources import load_table
@@ -3585,8 +3478,6 @@ def stream_mg_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 state: dict[str, Any] = {"cur": None}
 
                 def mg_update(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
                     sess = batch_df.sparkSession
                     b = (
                         batch_df.select(
@@ -3608,21 +3499,9 @@ def stream_mg_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ).parquet(nxt)
                     state["cur"] = nxt
 
-                q = (
-                    spark.readStream.schema(
-                        "doc_id long, text string, seq int"
-                    )
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(mg_update)
-                    .option(
-                        "checkpointLocation",
-                        tempfile.mkdtemp(prefix="mg_ckpt_"),
-                    )
-                    .trigger(availableNow=True)
-                    .start()
+                _fold_seq_stream(
+                    spark, root, "doc_id long, text string, seq int", mg_update
                 )
-                q.awaitTermination()
                 with open(final_marker, "w") as fh:
                     fh.write(state["cur"])
     with open(final_marker) as fh:
@@ -3752,7 +3631,6 @@ def stream_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     union-distinct against the <= m-row state; the streaming query is
     stateless (state lives in the positions table)."""
     import shutil
-    import tempfile
 
     from pyspark_xgboost_spark.sources import load_table
     from pyspark_xgboost_spark.sources.formats import build_lock
@@ -3773,8 +3651,6 @@ def stream_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 state: dict[str, Any] = {"cur": None}
 
                 def bloom_update(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
                     sess = batch_df.sparkSession
                     b = (
                         batch_df.select(F.md5("text").alias("digest"))
@@ -3789,21 +3665,9 @@ def stream_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                     b.write.mode("overwrite").parquet(nxt)
                     state["cur"] = nxt
 
-                q = (
-                    spark.readStream.schema(
-                        "doc_id long, text string, seq int"
-                    )
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(bloom_update)
-                    .option(
-                        "checkpointLocation",
-                        tempfile.mkdtemp(prefix="bloom_ckpt_"),
-                    )
-                    .trigger(availableNow=True)
-                    .start()
+                _fold_seq_stream(
+                    spark, root, "doc_id long, text string, seq int", bloom_update
                 )
-                q.awaitTermination()
                 with open(final_marker, "w") as fh:
                     fh.write(state["cur"])
     with open(final_marker) as fh:
@@ -4020,7 +3884,6 @@ def stream_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast (panel x M x K)-row LUT and partially aggregates —
     shuffling O(N) (id, long) pairs, never a float vector."""
     import shutil
-    import tempfile
 
     from pyspark_xgboost_spark.operators.similarity import (
         _N_QUERIES,
@@ -4043,8 +3906,6 @@ def stream_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.makedirs(tbl)
 
                 def pq_append(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
                     sess = batch_df.sparkSession
                     if not os.path.exists(cb_dir):
                         # freeze the codebook off the first batch
@@ -4065,21 +3926,12 @@ def stream_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                         .parquet(codes_dir)
                     )
 
-                q = (
-                    spark.readStream.schema(
-                        "vec_id long, embedding array<double>, seq int"
-                    )
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(pq_append)
-                    .option(
-                        "checkpointLocation",
-                        tempfile.mkdtemp(prefix="pqinc_ckpt_"),
-                    )
-                    .trigger(availableNow=True)
-                    .start()
+                _fold_seq_stream(
+                    spark,
+                    root,
+                    "vec_id long, embedding array<double>, seq int",
+                    pq_append,
                 )
-                q.awaitTermination()
                 with open(final_marker, "w") as fh:
                     fh.write("ok")
     codes = spark.read.parquet(codes_dir)
@@ -4324,12 +4176,8 @@ def _knng_apply_batch(
         .select("cid", "src", "dst", "d")
     )
     out = new_src_adj.unionByName(old_src_adj)
-    prev = sess.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    with scoped_conf(sess, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         out.write.mode("overwrite").partitionBy("cid").parquet(adj_dir)
-    finally:
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     new_mem.select("vec_id", "q", "cid").write.mode("append").parquet(mem_dir)
 
 
@@ -4347,7 +4195,6 @@ def _knng_ensure_state(spark: SparkSession, sf_dir: str) -> str:
     kNN-graph state under root/knng: frozen first-batch centroid seeds,
     cell-partitioned adjacency, appended members. Returns root."""
     import shutil
-    import tempfile
 
     from pyspark_xgboost_spark.operators.similarity import (
         _KM_K,
@@ -4368,8 +4215,6 @@ def _knng_ensure_state(spark: SparkSession, sf_dir: str) -> str:
                 os.makedirs(tbl)
 
                 def knng_update(batch_df: DataFrame, batch_id: int) -> None:
-                    if batch_df.isEmpty():
-                        return
                     sess = batch_df.sparkSession
                     xq = batch_df.select(
                         "vec_id", _knng_quant_expr().alias("q")
@@ -4391,21 +4236,12 @@ def _knng_ensure_state(spark: SparkSession, sf_dir: str) -> str:
                     )
                     _knng_apply_batch(sess, new_mem, mem_dir, adj_dir)
 
-                q = (
-                    spark.readStream.schema(
-                        "vec_id long, embedding array<double>, seq int"
-                    )
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(knng_update)
-                    .option(
-                        "checkpointLocation",
-                        tempfile.mkdtemp(prefix="knng_ckpt_"),
-                    )
-                    .trigger(availableNow=True)
-                    .start()
+                _fold_seq_stream(
+                    spark,
+                    root,
+                    "vec_id long, embedding array<double>, seq int",
+                    knng_update,
                 )
-                q.awaitTermination()
                 with open(final_marker, "w") as fh:
                     fh.write("ok")
     return root
@@ -4589,7 +4425,6 @@ def stream_hnsw_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     SSD. Reference scope: no ANN surface in the reference (SURVEY.md
     §2.2) — mandated training-data-pipeline extension."""
     import shutil
-    import tempfile
 
     from pyspark_xgboost_spark.operators.similarity import (
         _GG_HOPS,
@@ -4629,21 +4464,12 @@ def stream_hnsw_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
                     _knng_apply_batch(sess, new_mem, mem1_dir, adj1_dir)
 
-                q = (
-                    spark.readStream.schema(
-                        "vec_id long, embedding array<double>, seq int"
-                    )
-                    .option("maxFilesPerTrigger", "1")
-                    .parquet(os.path.join(root, "in"))
-                    .writeStream.foreachBatch(hnsw1_update)
-                    .option(
-                        "checkpointLocation",
-                        tempfile.mkdtemp(prefix="hnsw1_ckpt_"),
-                    )
-                    .trigger(availableNow=True)
-                    .start()
+                _fold_seq_stream(
+                    spark,
+                    root,
+                    "vec_id long, embedding array<double>, seq int",
+                    hnsw1_update,
                 )
-                q.awaitTermination()
                 with open(final_marker, "w") as fh:
                     fh.write("ok")
 
@@ -4653,25 +4479,12 @@ def stream_hnsw_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = members.select(
         F.col("vec_id").alias("cand_id"), F.col("q").alias("cq2")
     )
-    # the two layers' vector-carrying adjacencies are INDEPENDENT eager
-    # checkpoints — build them concurrently so the smaller layer-1 job
-    # back-fills the executor slots the layer-0 join leaves idle
-    # (guide §2.6 overlap-independent-jobs; r15: 0.37 + 0.31 s
-    # sequential, ~max of the two threaded)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f0 = pool.submit(
-            _gg_edges_with_vectors,
-            _gg_with_self_edges(adj0.select("src", "dst")),
-            corpus,
-        )
-        f1 = pool.submit(
-            _gg_edges_with_vectors,
-            _gg_with_self_edges(adj1.select("src", "dst")),
-            corpus,
-        )
-        edges0, edges1 = f0.result(), f1.result()
+    edges0 = _gg_edges_with_vectors(
+        _gg_with_self_edges(adj0.select("src", "dst")), corpus
+    )
+    edges1 = _gg_edges_with_vectors(
+        _gg_with_self_edges(adj1.select("src", "dst")), corpus
+    )
     entry1 = spark.read.parquet(mem1_dir).agg(F.min("vec_id").alias("e"))
     frontier = (
         members.filter(F.col("vec_id") < _N_QUERIES)

@@ -10,7 +10,9 @@ else rather than silently coercing.
 
 from __future__ import annotations
 
+import contextlib
 import re
+from collections.abc import Iterator, Mapping
 
 from pyspark.sql import SparkSession
 
@@ -49,6 +51,28 @@ def get_conf_boolean(spark: SparkSession, key: str, default: bool) -> bool:
         f"expected a boolean conf value for {key!r} but found "
         f"{type(val).__name__} value: {val!r}"
     )
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set the session confs ``confs`` for the body of the ``with``
+    block, then restore every key to its prior state — also when the
+    body raises. A key that was unset is unset again, not pinned to
+    its default: a pinned default outlives the block and would shadow
+    a later cluster-level setting. The one save/restore in the
+    package; a streaming query reads its confs at ``start()``, so
+    scoping them around the start scopes them to that query."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 # The ONE whitespace-tokenizer contract, shared by every engine side.

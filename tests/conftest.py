@@ -109,8 +109,8 @@ def run_pooled(spark, checks, serial=(), workers=12):
     """Shared pooled-sweep runner for the per-module contract checks
     (the smoke-sweep discipline): run every check concurrently, each on
     its own ``spark.newSession()`` clone — SQLConf is per-session, so a
-    check (or a staged-state builder it calls) that save/restores
-    session conf mid-build can't leak a stale value into a concurrent
+    check (or a staged-state builder it calls) that scopes session
+    conf mid-build (utils.scoped_conf) can't leak a stale value into a concurrent
     check (the race class behind the round-14 pq-staging flake; the
     sweep tools use the same isolation). Then the ``serial`` ones
     (parent-session mutators, AQE-finalization-sensitive assertions)

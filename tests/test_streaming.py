@@ -1,7 +1,18 @@
 """Structured Streaming semantics: one availableNow pass over the
-events table must reproduce the batch result exactly."""
+events table must reproduce the batch result exactly. Also pins the
+one stream runner, the staged-batch fold and ``utils.scoped_conf``:
+no query leaves a stream, a checkpoint directory or a conf behind."""
 
 from __future__ import annotations
+
+import ast
+import contextlib
+import os
+import shutil
+import tempfile
+from pathlib import Path
+
+import pytest
 
 from tests.conftest import SF_DIR
 
@@ -271,6 +282,194 @@ def _chk_stream_merge_upsert_incremental_chain(spark):
     assert sorted(
         os.path.basename(p) for p in glob.glob(os.path.join(root, "table", "v*"))
     ) == versions
+
+
+# Every stream in the package runs through one runner (stream._drain),
+# folds over staged batches go through stream._fold_seq_stream, and
+# conf changes go through utils.scoped_conf. Each row: (key, state
+# before the block — None = unset, value inside the block).
+_SCOPED_CONF_CASES = [
+    ("spark.sql.shuffle.partitions", "7", "3"),
+    ("spark.sql.streaming.noDataMicroBatches.enabled", None, "false"),
+    ("spark.sql.sources.partitionOverwriteMode", None, "dynamic"),
+    ("spark.sql.sources.partitionOverwriteMode", "static", "dynamic"),
+]
+
+
+class _Boom(Exception):
+    pass
+
+
+def test_scoped_conf_restores_prior_state(spark):
+    """Set keys get their value back, unset keys are unset again (not
+    pinned to a default), and both hold when the block raises."""
+    from pyspark_xgboost_spark.utils import scoped_conf
+
+    sess = spark.newSession()
+    for key, before, inside in _SCOPED_CONF_CASES:
+        for raises in (False, True):
+            if before is None:
+                sess.conf.unset(key)
+            else:
+                sess.conf.set(key, before)
+            with pytest.raises(_Boom) if raises else contextlib.nullcontext():
+                with scoped_conf(sess, {key: inside}):
+                    assert sess.conf.get(key) == inside
+                    if raises:
+                        raise _Boom
+            assert sess.conf.get(key, None) == before, (key, before, raises)
+
+
+_LEAK_CONFS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.noDataMicroBatches.enabled",
+    "spark.sql.sources.partitionOverwriteMode",
+)
+
+
+def _leftover_ckpts(tmp):
+    return sorted(str(p) for p in tmp.rglob("*_ckpt_*"))
+
+
+def test_staged_builds_leave_no_stream_checkpoint_or_conf(
+    spark, tmp_path, monkeypatch
+):
+    """A staged build on a fresh source copy (new path: the fingerprint
+    key forces a build) leaves no active stream, no checkpoint
+    directory and no changed session conf behind."""
+    from pyspark_xgboost_spark.sources.formats import (
+        _SCRATCH,
+        scan_python_datasource_stream,
+        sink_dynamic_partition_overwrite,
+    )
+    from pyspark_xgboost_spark.streaming.stream import (
+        stream_reservoir_incremental,
+    )
+
+    sf = tmp_path / "sf"
+    shutil.copytree(SF_DIR, sf)
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    sess = spark.newSession()
+    confs = {k: sess.conf.get(k, None) for k in _LEAK_CONFS}
+    try:
+        for query in (
+            stream_reservoir_incremental,
+            sink_dynamic_partition_overwrite,
+            scan_python_datasource_stream,
+        ):
+            name = query.__name__
+            assert query(sess, str(sf)).collect(), name
+            assert sess.streams.active == [], name
+            assert _leftover_ckpts(tmp) == [], name
+            assert {k: sess.conf.get(k, None) for k in _LEAK_CONFS} == confs, name
+    finally:
+        key = str(sf).strip("/").replace("/", "_")
+        shutil.rmtree(os.path.join(_SCRATCH, key), ignore_errors=True)
+
+
+def test_failed_fold_propagates_and_cleans_up(spark, tmp_path, monkeypatch):
+    """A fold whose batch function raises surfaces the error and leaves
+    no active stream and no checkpoint directory."""
+    from pyspark_xgboost_spark.streaming.stream import _fold_seq_stream
+
+    root = tmp_path / "root"
+    spark.range(3).selectExpr("id AS doc_id", "0 AS seq").coalesce(1).write.parquet(
+        str(root / "in")
+    )
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+
+    def fail(batch_df, batch_id):
+        raise ValueError("fold batch failed on purpose")
+
+    with pytest.raises(Exception, match="fold batch failed on purpose"):
+        _fold_seq_stream(spark, str(root), "doc_id long, seq int", fail)
+    assert spark.streams.active == []
+    assert _leftover_ckpts(tmp) == []
+
+
+# (lastProgress, shard index the docbin poll reads from it)
+_DOCBIN_PROGRESS = [
+    (None, -1),
+    ({"sources": []}, -1),
+    ({"sources": [{"endOffset": None}]}, -1),
+    ({"sources": [{"endOffset": {"file_idx": 4}}]}, 4),
+    ({"sources": [{"endOffset": '{"file_idx": 8}'}]}, 8),
+    ({"sources": [{"endOffset": "{'file_idx': 8}"}]}, 8),
+]
+
+
+def test_docbin_poll_reads_every_offset_encoding():
+    from pyspark_xgboost_spark.sources.formats import _docbin_file_idx
+
+    for progress, want in _DOCBIN_PROGRESS:
+        assert _docbin_file_idx(progress) == want, progress
+
+
+# functions allowed to await a streaming query
+_AWAITERS = {"_drain", "_run_docbin_stream"}
+
+
+def test_stream_mechanisms_have_one_implementation():
+    """Regrowth guard: outside the stream runner and the docbin poll
+    helper nothing awaits a query, no checkpoint directory is minted
+    with mkdtemp, and no function saves a conf with conf.get and puts
+    it back in a ``finally:`` (utils.scoped_conf does that)."""
+    pkg = Path(__file__).resolve().parents[1] / "pyspark_xgboost_spark"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            own = list(_own_nodes(fn))
+            for call in own:
+                if not _is_method_call(call):
+                    continue
+                name = call.func.attr
+                if name == "awaitTermination" and fn.name not in _AWAITERS:
+                    offenders.append((path.name, fn.name, "awaitTermination"))
+                if name == "mkdtemp" and any(
+                    "ckpt" in str(getattr(kw.value, "value", ""))
+                    for kw in call.keywords
+                ):
+                    offenders.append((path.name, fn.name, "checkpoint mkdtemp"))
+            saves = any(_is_conf_call(c, ("get",)) for c in own)
+            restores = any(
+                _is_conf_call(c, ("set", "unset"))
+                for t in own
+                if isinstance(t, ast.Try)
+                for st in t.finalbody
+                for c in ast.walk(st)
+            )
+            if saves and restores and fn.name != "scoped_conf":
+                offenders.append((path.name, fn.name, "conf save/restore"))
+    assert not offenders, offenders
+
+
+def _own_nodes(fn):
+    """Nodes of ``fn``'s body, not descending into nested functions."""
+    todo = list(ast.iter_child_nodes(fn))
+    while todo:
+        n = todo.pop()
+        yield n
+        if not isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            todo.extend(ast.iter_child_nodes(n))
+
+
+def _is_method_call(node):
+    return isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+
+
+def _is_conf_call(node, methods):
+    return (
+        _is_method_call(node)
+        and node.func.attr in methods
+        and isinstance(node.func.value, ast.Attribute)
+        and node.func.value.attr == "conf"
+    )
 
 
 # Pooled contract sweep (smoke-sweep discipline; see test_plans_r11).

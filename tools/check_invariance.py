@@ -13,10 +13,11 @@ Runs in TWO POOLED PHASES (all queries at 32 shuffle partitions, then
 all at 5, compared pairwise) across 8 threads. Each query call gets its
 own ``spark.newSession()`` clone with the phase's partition count set on
 THAT clone: SQLConf is per-session, so a staged-state builder that
-save/restores ``spark.sql.shuffle.partitions`` mid-build only touches
-its own clone — the unsynchronized restore can never leak a stale count
-into a concurrent query's phase (which could otherwise compare a query
-at the SAME count twice and false-PASS a variant query). Phase a stores
+scopes ``spark.sql.shuffle.partitions`` mid-build with
+``utils.scoped_conf`` only touches its own clone — the unsynchronized
+restore can never leak a stale count into a concurrent query's phase
+(which could otherwise compare a query at the SAME count twice and
+false-PASS a variant query). Phase a stores
 only a digest per query (memory stays bounded by the largest single
 result, not the whole surface); a phase-b mismatch re-runs the query at
 32 partitions to print the actual row diff. ``--serial`` preserves the

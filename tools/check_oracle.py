@@ -9,10 +9,10 @@ Queries run on a THREAD POOL (the pooled-sweep discipline the contract
 tests use): Spark's scheduler interleaves the jobs, DuckDB runs each
 oracle on its own cursor, and the staged-state builders serialize on
 their build_locks. Each pooled query call gets its own
-``spark.newSession()`` clone — SQLConf is per-session, so the conf a
-staged-state builder save/restores mid-build (shuffle.partitions,
-partitionOverwriteMode) stays on its own clone and can't perturb a
-concurrent query's plan. A serial fallback: ``--serial``.
+``spark.newSession()`` clone — SQLConf is per-session, so the confs a
+staged-state builder scopes mid-build with ``utils.scoped_conf``
+(shuffle.partitions, partitionOverwriteMode) stay on its own clone and
+can't perturb a concurrent query's plan. A serial fallback: ``--serial``.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...] [--serial]
 """
