@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
@@ -7,6 +8,23 @@ import pytest
 sys.path.insert(0, "/root/repo")
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def _test_driver_mem() -> str:
+    """Heap of each Spark driver JVM the suite starts. A full run holds
+    two at once — the ``spark`` fixture's and the overlapped sweep's —
+    next to the local-cluster test's JVMs. At the session default (32g)
+    both heaps grow past the RAM of a small host and the kernel OOM
+    killer ends the largest JVM; when that is the fixture's, every later
+    test fails on a refused connection. A quarter of RAM each (1-8 GB)
+    keeps them all inside it."""
+    with open("/proc/meminfo") as fh:
+        total_kb = int(fh.readline().split()[1])
+    return f"{max(1, min(8, total_kb // (4 << 20)))}g"
+
+
+# read by session.get_spark; inherited by the overlapped subprocesses
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _test_driver_mem())
 
 def _script_lc():
     from tests.test_local_cluster import _SCRIPT
