@@ -2,11 +2,18 @@
 
 The reference touches parquet only, and only for 1-row model blobs
 (SURVEY.md §2.1 scans/sinks note). A real data engine ingests more:
-these operators stage a table copy in the target format once (under a
-deterministic /tmp scratch dir), then run the query against the staged
-copy — so the scan path (schema application, type coercion, projection
-pushdown where the format supports it) is genuinely exercised and the
-DuckDB oracle still runs against the original parquet.
+these operators stage a table copy in the target format once, then run
+the query against the staged copy — so the scan path (schema
+application, type coercion, projection pushdown where the format
+supports it) is genuinely exercised and the DuckDB oracle still runs
+against the original parquet.
+
+Every staged artifact in the package (format copies here, stream batch
+fixtures and fold tables in ``streaming.stream``) goes through two
+functions: ``scratch_path`` names the fingerprint-keyed directory and
+collects its stale siblings, and ``ensure_built`` owns the
+check-marker / lock / rebuild / marker protocol, removing a build that
+raised so no half-built tree is ever served.
 
 Scale notes: CSV/JSON scans are line-splittable, so a 100 TB landing
 zone parallelizes by file block exactly like parquet; the difference is
@@ -28,6 +35,8 @@ import shutil
 import tempfile
 import threading as _threading
 import time
+from collections.abc import Callable
+
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -64,11 +73,10 @@ _MEMO_GUARD = _threading.Lock()
 _MEMO_KEY_LOCKS: dict[tuple[int, str], object] = {}
 
 
-def memo_key_lock(cache, key: str):
+def _memo_key_lock(cache, key: str):
     """A threading.Lock unique to (cache, key) — lets concurrent
     consumers of ONE artifact serialize on its build while different
-    artifacts build in parallel (used by every memo cache; also
-    available to the hand-rolled _BPE_CACHE/_KM_CACHE memos)."""
+    artifacts build in parallel (memo_by_fingerprint's build lock)."""
     with _MEMO_GUARD:
         return _MEMO_KEY_LOCKS.setdefault(
             (id(cache), key), _threading.Lock()
@@ -102,7 +110,7 @@ def memo_by_fingerprint(cache, spark, sf_dir, table, build):
     # double-checked per-(cache, key) lock: a wide thread pool (the
     # smoke sweep) otherwise launches the expensive build N times in
     # parallel — every consumer pays the build instead of one
-    with memo_key_lock(cache, key):
+    with _memo_key_lock(cache, key):
         if key not in cache:
             for stale in [
                 k
@@ -118,12 +126,12 @@ def memo_by_fingerprint(cache, spark, sf_dir, table, build):
 def build_lock(path: str):
     """Exclusive flock for a check-marker-then-build staging section.
 
-    The staging protocol everywhere in this repo is 'if marker missing:
-    rmtree + rebuild + write marker'. That is idempotent but NOT safe
-    to race: two threads (a wide smoke pool) or two processes (pytest
-    next to a bench run) building the SAME artifact can interleave the
-    rmtree with the other's read. Callers take this lock around the
-    whole section and RE-CHECK the marker inside, so the loser of the
+    ``ensure_built`` owns the staging protocol ('if marker missing:
+    rmtree + rebuild + write marker') and is this lock's caller. The
+    protocol is idempotent but NOT safe to race: two threads (a wide
+    smoke pool) or two processes (pytest next to a bench run) building
+    the SAME artifact can interleave the rmtree with the other's read,
+    so the marker is RE-CHECKED under the lock and the loser of the
     race finds the artifact built and just reads it. The lock file is
     a SIBLING of the artifact dir (never inside it — the build rmtrees
     the dir), and flock gives both thread- and process-scope on Linux."""
@@ -206,8 +214,8 @@ def _register_docbin(spark: SparkSession) -> None:
 def gc_stale_siblings(parent: str, prefix: str, keep: str) -> None:
     """Best-effort removal of sibling scratch dirs sharing ``prefix``
     (i.e. older fingerprints of the same derived artifact) other than
-    ``keep`` — without this, /tmp grows monotonically every time the
-    source data is replaced (round-2 verdict item)."""
+    ``keep`` — without this, the scratch tree grows monotonically every
+    time the source data is replaced (round-2 verdict item)."""
     try:
         entries = os.listdir(parent)
     except OSError:
@@ -217,21 +225,62 @@ def gc_stale_siblings(parent: str, prefix: str, keep: str) -> None:
             shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
 
 
+def scratch_path(sf_dir: str, table: str, prefix: str) -> str:
+    """``<_SCRATCH>/<sf_dir key>/<prefix><fingerprint of table>``: the
+    one place that knows the scratch layout. Older fingerprints of the
+    same artifact (siblings sharing ``prefix``) are collected, so
+    replacing the dataset in place re-stages instead of serving stale
+    data, and the tree stays one copy per artifact."""
+    parent = os.path.join(_SCRATCH, sf_dir.strip("/").replace("/", "_"))
+    leaf = prefix + src_fingerprint(sf_dir, table)
+    gc_stale_siblings(parent, prefix, leaf)
+    return os.path.join(parent, leaf)
+
+
+_STAGED = "_STAGED"
+
+
+def ensure_built(out: str, build: Callable[[str], str | None]) -> str:
+    """Build the artifact directory ``out`` once: ``build(out)`` runs
+    on a fresh empty ``out`` under ``build_lock(out)`` (marker checked
+    before and after taking the lock), and its return value — a note
+    such as the final version's path, or None — is written to the
+    ``_STAGED`` marker, whose text this returns on every call. The
+    marker is written to a temp file and renamed into place, so a
+    truncated marker never passes the existence check; a build that
+    raises takes ``out`` with it. The marker is named for the protocol
+    rather than ``_SUCCESS``: a multi-write build gets a ``_SUCCESS``
+    from its first Spark write."""
+    marker = os.path.join(out, _STAGED)
+    if not os.path.exists(marker):
+        with build_lock(out):
+            if not os.path.exists(marker):
+                shutil.rmtree(out, ignore_errors=True)
+                os.makedirs(out)
+                try:
+                    note = build(out)
+                    with open(marker + ".tmp", "w") as fh:
+                        fh.write(note or "")
+                    os.replace(marker + ".tmp", marker)
+                except BaseException:
+                    shutil.rmtree(out, ignore_errors=True)
+                    raise
+    with open(marker) as fh:
+        return fh.read()
+
+
 def _stage(spark: SparkSession, sf_dir: str, table: str, fmt: str) -> str:
     """Write {table} from parquet into {fmt} once per (sf_dir, table,
     source-content fingerprint); return the staged directory. Stale
     fingerprints of the same (table, fmt) are garbage-collected."""
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    leaf = f"{table}_{fmt}_{src_fingerprint(sf_dir, table)}"
-    out = os.path.join(parent, leaf)
-    gc_stale_siblings(parent, f"{table}_{fmt}_", leaf)
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        with build_lock(out):
-            if not os.path.exists(marker):
-                df = load_table(spark, sf_dir, table)
-                df.write.mode("overwrite").format(fmt).save(out)
+    out = scratch_path(sf_dir, table, f"{table}_{fmt}_")
+    ensure_built(
+        out,
+        lambda d: load_table(spark, sf_dir, table)
+        .write.mode("overwrite")
+        .format(fmt)
+        .save(d),
+    )
     return out
 
 
@@ -297,17 +346,15 @@ def _stage_lineitem_by_flag(spark: SparkSession, sf_dir: str) -> str:
     """Stage lineitem as partitionBy(l_returnflag) parquet in scratch
     (idempotent, fingerprint-keyed); return the staged directory.
     Shared by the sink round-trip query and the partition-pruned scan."""
-    key = sf_dir.strip("/").replace("/", "_")
-    leaf = f"lineitem_by_flag_{src_fingerprint(sf_dir, 'lineitem')}"
-    gc_stale_siblings(os.path.join(_SCRATCH, key), "lineitem_by_flag_", leaf)
-    out = os.path.join(_SCRATCH, key, leaf)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        with build_lock(out):
-            if not os.path.exists(os.path.join(out, "_SUCCESS")):
-                li = load_table(spark, sf_dir, "lineitem").select(
-                    "l_orderkey", "l_extendedprice", "l_returnflag"
-                )
-                li.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
+    out = scratch_path(sf_dir, "lineitem", "lineitem_by_flag_")
+    ensure_built(
+        out,
+        lambda d: load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_extendedprice", "l_returnflag")
+        .write.mode("overwrite")
+        .partitionBy("l_returnflag")
+        .parquet(d),
+    )
     return out
 
 
@@ -408,7 +455,8 @@ def sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _write_bucketed(table: str, name: str, bucket_col: str) -> None:
         warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
         # old-fingerprint bucketed copies of this table are dead weight
-        # (and dead catalog entries) once the source data changes
+        # (and dead catalog entries) once the source data changes; not
+        # scratch_path: they are warehouse tables, not scratch dirs
         prefix = f"{table}_bkt_{key}_"
         gc_stale_siblings(warehouse, prefix, name)
         for t in spark.catalog.listTables():
@@ -496,17 +544,15 @@ def scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate: the shuffle carries one partial row per partition
     whatever the corpus size. Staged copy is fingerprint-keyed and
     GC'd like every other derived format."""
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    leaf = f"documents_text_{src_fingerprint(sf_dir, 'documents')}"
-    out = os.path.join(parent, leaf)
-    gc_stale_siblings(parent, "documents_text_", leaf)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        with build_lock(out):
-            if not os.path.exists(os.path.join(out, "_SUCCESS")):
-                load_table(spark, sf_dir, "documents").select("text").write.mode(
-                    "overwrite"
-                ).format("text").save(out)
+    out = scratch_path(sf_dir, "documents", "documents_text_")
+    ensure_built(
+        out,
+        lambda d: load_table(spark, sf_dir, "documents")
+        .select("text")
+        .write.mode("overwrite")
+        .format("text")
+        .save(d),
+    )
     lines = spark.read.text(out)
     toks = F.expr(r"filter(split(lower(value), '[ \\t\\n\\f\\r]+'), x -> x != '')")
     return lines.agg(
@@ -546,30 +592,25 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
     would delete every other partition first. The conf is set
     query-local and restored. The oracle encodes the expected final
     table state: non-R partitions intact, R filtered."""
-    key = sf_dir.strip("/").replace("/", "_")
-    leaf = f"lineitem_dpo_{src_fingerprint(sf_dir, 'lineitem')}"
-    gc_stale_siblings(os.path.join(_SCRATCH, key), "lineitem_dpo_", leaf)
-    out = os.path.join(_SCRATCH, key, leaf)
+    out = scratch_path(sf_dir, "lineitem", "lineitem_dpo_")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_returnflag"
     )
-    marker = os.path.join(out, "_DPO_DONE")
-    if not os.path.exists(marker):
-        with build_lock(out):
-            if not os.path.exists(marker):
-                li.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
-                with scoped_conf(
-                    spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
-                ):
-                    # backfill: replace ONLY the R partition (even orderkeys)
-                    (
-                        li.filter((F.col("l_returnflag") == "R") & (F.col("l_orderkey") % 2 == 0))
-                        .write.mode("overwrite")
-                        .partitionBy("l_returnflag")
-                        .parquet(out)
-                    )
-                with open(marker, "w") as fh:
-                    fh.write("ok")
+
+    def build(d: str) -> None:
+        li.write.mode("overwrite").partitionBy("l_returnflag").parquet(d)
+        with scoped_conf(
+            spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+        ):
+            # backfill: replace ONLY the R partition (even orderkeys)
+            (
+                li.filter((F.col("l_returnflag") == "R") & (F.col("l_orderkey") % 2 == 0))
+                .write.mode("overwrite")
+                .partitionBy("l_returnflag")
+                .parquet(d)
+            )
+
+    ensure_built(out, build)
     back = spark.read.parquet(out)
     return back.groupBy("l_returnflag").agg(
         F.count("*").alias("n"),
@@ -617,34 +658,32 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     a real table format would also rewrite (file-level granularity is
     the format's job, not the engine's). The version directory is
     fingerprint-keyed like every staged artifact."""
-    key = sf_dir.strip("/").replace("/", "_")
-    leaf = f"docs_merge_v2_{src_fingerprint(sf_dir, 'documents')}"
-    gc_stale_siblings(os.path.join(_SCRATCH, key), "docs_merge_v2_", leaf)
-    out = os.path.join(_SCRATCH, key, leaf)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        with build_lock(out):
-            if not os.path.exists(os.path.join(out, "_SUCCESS")):
-                base = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-                changes = (
-                    base.filter(F.col("doc_id") % 10 == 0)
-                    .select("doc_id", F.lit("patched").alias("source"))
-                    .unionByName(
-                        base.filter(F.col("doc_id") % 97 == 0).select(
-                            (F.col("doc_id") + 1000000).alias("doc_id"),
-                            F.lit("inserted").alias("source"),
-                        )
-                    )
+    out = scratch_path(sf_dir, "documents", "docs_merge_v2_")
+
+    def build(d: str) -> None:
+        base = load_table(spark, sf_dir, "documents").select("doc_id", "source")
+        changes = (
+            base.filter(F.col("doc_id") % 10 == 0)
+            .select("doc_id", F.lit("patched").alias("source"))
+            .unionByName(
+                base.filter(F.col("doc_id") % 97 == 0).select(
+                    (F.col("doc_id") + 1000000).alias("doc_id"),
+                    F.lit("inserted").alias("source"),
                 )
-                merged = (
-                    base.alias("b")
-                    .join(changes.alias("c"), "doc_id", "full_outer")
-                    .select(
-                        "doc_id",
-                        F.coalesce(F.col("c.source"), F.col("b.source")).alias("source"),
-                        F.when(F.col("c.source").isNull(), 0).otherwise(1).alias("was_changed"),
-                    )
-                )
-                merged.write.mode("overwrite").parquet(out)
+            )
+        )
+        merged = (
+            base.alias("b")
+            .join(changes.alias("c"), "doc_id", "full_outer")
+            .select(
+                "doc_id",
+                F.coalesce(F.col("c.source"), F.col("b.source")).alias("source"),
+                F.when(F.col("c.source").isNull(), 0).otherwise(1).alias("was_changed"),
+            )
+        )
+        merged.write.mode("overwrite").parquet(d)
+
+    ensure_built(out, build)
     back = spark.read.parquet(out)
     return back.groupBy("source").agg(
         F.count("*").alias("n_docs"),
@@ -675,23 +714,19 @@ def scan_json_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay countable (auditable) but excluded from the data aggregate.
     Corruption is injected deterministically (doc_id % 13), so the
     oracle states the expected split from the clean table."""
-    key = sf_dir.strip("/").replace("/", "_")
-    fp = src_fingerprint(sf_dir, "documents")
-    parent = os.path.join(_SCRATCH, key)
-    leaf = f"docs_corrupt_{fp}"
-    gc_stale_siblings(parent, "docs_corrupt_", leaf)
-    d = os.path.join(parent, leaf)
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
-        with build_lock(d):
-            if not os.path.exists(os.path.join(d, "_SUCCESS")):
-                docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-                line = F.to_json(F.struct("doc_id", "n_chars"))
-                # corrupt = truncate the JSON object halfway: unparseable, but
-                # still exactly one line so the record count is preserved
-                payload = F.when(
-                    F.col("doc_id") % 13 == 0, F.substring(line, 1, 9)
-                ).otherwise(line)
-                docs.select(payload.alias("value")).write.mode("overwrite").text(d)
+    d = scratch_path(sf_dir, "documents", "docs_corrupt_")
+
+    def build(out: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
+        line = F.to_json(F.struct("doc_id", "n_chars"))
+        # corrupt = truncate the JSON object halfway: unparseable, but
+        # still exactly one line so the record count is preserved
+        payload = F.when(
+            F.col("doc_id") % 13 == 0, F.substring(line, 1, 9)
+        ).otherwise(line)
+        docs.select(payload.alias("value")).write.mode("overwrite").text(out)
+
+    ensure_built(d, build)
     back = spark.read.schema(
         "doc_id long, n_chars long, _corrupt_record string"
     ).option("mode", "PERMISSIVE").option(
@@ -709,17 +744,14 @@ def scan_json_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _stage_gzip_csv(spark: SparkSession, sf_dir: str, table: str) -> str:
     """Stage {table} as GZIP-compressed CSV (one .csv.gz per input
     partition), fingerprint-keyed like _stage."""
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    leaf = f"{table}_csvgz_{src_fingerprint(sf_dir, table)}"
-    out = os.path.join(parent, leaf)
-    gc_stale_siblings(parent, f"{table}_csvgz_", leaf)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        with build_lock(out):
-            if not os.path.exists(os.path.join(out, "_SUCCESS")):
-                load_table(spark, sf_dir, table).write.mode("overwrite").option(
-                    "compression", "gzip"
-                ).csv(out)
+    out = scratch_path(sf_dir, table, f"{table}_csvgz_")
+    ensure_built(
+        out,
+        lambda d: load_table(spark, sf_dir, table)
+        .write.mode("overwrite")
+        .option("compression", "gzip")
+        .csv(d),
+    )
     return out
 
 
@@ -1010,34 +1042,27 @@ def _stage_docbin(sf_dir: str) -> str:
 
     import pyarrow.parquet as pq
 
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    leaf = f"documents_docbin_{src_fingerprint(sf_dir, 'documents')}"
-    out = os.path.join(parent, leaf)
-    gc_stale_siblings(parent, "documents_docbin_", leaf)
-    marker = os.path.join(out, "_DONE")
-    if not os.path.exists(marker):
-        with build_lock(out):
-            if not os.path.exists(marker):
-                os.makedirs(out, exist_ok=True)
-                tbl = pq.read_table(
-                    os.path.join(sf_dir, "documents.parquet"),
-                    columns=["doc_id", "source", "n_chars"],
-                )
-                shards = [bytearray() for _ in range(_DOCBIN_SHARDS)]
-                for doc_id, source, n_chars in zip(
-                    tbl.column("doc_id").to_pylist(),
-                    tbl.column("source").to_pylist(),
-                    tbl.column("n_chars").to_pylist(),
-                ):
-                    raw = source.encode("utf-8")
-                    rec = _struct.pack("<qqH", doc_id, n_chars, len(raw)) + raw
-                    shards[doc_id % _DOCBIN_SHARDS].extend(rec)
-                for i, payload in enumerate(shards):
-                    with open(os.path.join(out, f"part-{i:04d}.docbin"), "wb") as fh:
-                        fh.write(payload)
-                with open(marker, "w") as fh:
-                    fh.write("ok")
+    out = scratch_path(sf_dir, "documents", "documents_docbin_")
+
+    def build(out: str) -> None:
+        tbl = pq.read_table(
+            os.path.join(sf_dir, "documents.parquet"),
+            columns=["doc_id", "source", "n_chars"],
+        )
+        shards = [bytearray() for _ in range(_DOCBIN_SHARDS)]
+        for doc_id, source, n_chars in zip(
+            tbl.column("doc_id").to_pylist(),
+            tbl.column("source").to_pylist(),
+            tbl.column("n_chars").to_pylist(),
+        ):
+            raw = source.encode("utf-8")
+            rec = _struct.pack("<qqH", doc_id, n_chars, len(raw)) + raw
+            shards[doc_id % _DOCBIN_SHARDS].extend(rec)
+        for i, payload in enumerate(shards):
+            with open(os.path.join(out, f"part-{i:04d}.docbin"), "wb") as fh:
+                fh.write(payload)
+
+    ensure_built(out, build)
     return out
 
 
@@ -1191,30 +1216,19 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     the knob a real job derives from target-file-size /
     observed-file-size. The file counts before/after are asserted in
     tests; the oracle pins that compaction is content-neutral."""
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    fp = src_fingerprint(sf_dir, "lineitem")
-    frag_leaf, comp_leaf = f"li_frag_{fp}", f"li_compact_{fp}"
-    gc_stale_siblings(parent, "li_frag_", frag_leaf)
-    gc_stale_siblings(parent, "li_compact_", comp_leaf)
-    frag = os.path.join(parent, frag_leaf)
-    compact = os.path.join(parent, comp_leaf)
+    frag = scratch_path(sf_dir, "lineitem", "li_frag_")
+    compact = scratch_path(sf_dir, "lineitem", "li_compact_")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_returnflag"
     )
-    if not os.path.exists(os.path.join(frag, "_SUCCESS")):
-        with build_lock(frag):
-            if not os.path.exists(os.path.join(frag, "_SUCCESS")):
-                li.repartition(64).write.mode("overwrite").parquet(frag)
-    if not os.path.exists(os.path.join(compact, "_SUCCESS")):
-        with build_lock(compact):
-            if not os.path.exists(os.path.join(compact, "_SUCCESS")):
-                (
-                    spark.read.parquet(frag)
-                    .repartition(_COMPACT_TARGET)
-                    .write.mode("overwrite")
-                    .parquet(compact)
-                )
+    ensure_built(frag, lambda d: li.repartition(64).write.mode("overwrite").parquet(d))
+    ensure_built(
+        compact,
+        lambda d: spark.read.parquet(frag)
+        .repartition(_COMPACT_TARGET)
+        .write.mode("overwrite")
+        .parquet(d),
+    )
     back = spark.read.parquet(compact)
     return back.groupBy("l_returnflag").agg(
         F.count("*").alias("n"),
@@ -1253,34 +1267,28 @@ def scan_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     production form, with per-file reconciliation as the fallback
     exercised here. The oracle computes the same conditional aggregate
     from the evolved source table."""
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    fp = src_fingerprint(sf_dir, "orders")
-    leaf = f"orders_evo_{fp}"
-    gc_stale_siblings(parent, "orders_evo_", leaf)
-    root = os.path.join(parent, leaf)
+    root = scratch_path(sf_dir, "orders", "orders_evo_")
     orders = load_table(spark, sf_dir, "orders")
     cutoff = F.lit("1998-01-01").cast("timestamp")
-    if not os.path.exists(os.path.join(root, "_DONE")):
-        with build_lock(root):
-            if not os.path.exists(os.path.join(root, "_DONE")):
-                (
-                    orders.filter(F.col("o_orderdate") < cutoff)
-                    .select("o_orderkey", "o_orderstatus", "o_orderdate")
-                    .write.mode("overwrite")
-                    .parquet(os.path.join(root, "v1"))
-                )
-                (
-                    orders.filter(F.col("o_orderdate") >= cutoff)
-                    .select(
-                        "o_orderkey", "o_orderstatus", "o_orderdate",
-                        "o_totalprice", "o_orderpriority",
-                    )
-                    .write.mode("overwrite")
-                    .parquet(os.path.join(root, "v2"))
-                )
-                with open(os.path.join(root, "_DONE"), "w") as fh:
-                    fh.write("ok")
+
+    def build(root: str) -> None:
+        (
+            orders.filter(F.col("o_orderdate") < cutoff)
+            .select("o_orderkey", "o_orderstatus", "o_orderdate")
+            .write.mode("overwrite")
+            .parquet(os.path.join(root, "v1"))
+        )
+        (
+            orders.filter(F.col("o_orderdate") >= cutoff)
+            .select(
+                "o_orderkey", "o_orderstatus", "o_orderdate",
+                "o_totalprice", "o_orderpriority",
+            )
+            .write.mode("overwrite")
+            .parquet(os.path.join(root, "v2"))
+        )
+
+    ensure_built(root, build)
     merged = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(root, "v1"), os.path.join(root, "v2")
     )
@@ -1363,40 +1371,38 @@ def sink_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed by 8 buckets (at 100 TB the bucket count scales with target
     file size), and the stats read-back aggregates the CLUSTERED
     files."""
-    key = sf_dir.strip("/").replace("/", "_")
-    leaf = f"orders_zorder_{src_fingerprint(sf_dir, 'orders')}"
-    gc_stale_siblings(os.path.join(_SCRATCH, key), "orders_zorder_", leaf)
-    out = os.path.join(_SCRATCH, key, leaf)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        with build_lock(out):
-            if not os.path.exists(os.path.join(out, "_SUCCESS")):
-                orders = load_table(spark, sf_dir, "orders")
-                raw = orders.select(
-                    "o_orderkey",
-                    F.col("o_custkey").alias("c"),
-                    F.datediff(
-                        F.col("o_orderdate"), F.lit("1970-01-01").cast("date")
-                    ).alias("d"),
-                )
-                b = raw.agg(
-                    F.min("c").alias("cmin"),
-                    F.greatest(F.max("c") - F.min("c"), F.lit(1)).alias("cspan"),
-                    F.min("d").alias("dmin"),
-                    F.greatest(F.max("d") - F.min("d"), F.lit(1)).alias("dspan"),
-                )
-                dims = raw.crossJoin(F.broadcast(b)).select(
-                    "o_orderkey",
-                    "c",
-                    "d",
-                    F.expr("((c - cmin) * 65535) div cspan").alias("x"),
-                    F.expr("((d - dmin) * 65535) div dspan").alias("y"),
-                )
-                z = dims.withColumn(
-                    "zval", F.expr(_z_interleave_sql("x", "y", div="div")).cast("bigint")
-                ).withColumn(
-                    "zbucket", (F.col("zval") / (2 ** (2 * _Z_BITS - 3))).cast("bigint")
-                )
-                z.write.mode("overwrite").partitionBy("zbucket").parquet(out)
+    out = scratch_path(sf_dir, "orders", "orders_zorder_")
+
+    def build(out: str) -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        raw = orders.select(
+            "o_orderkey",
+            F.col("o_custkey").alias("c"),
+            F.datediff(
+                F.col("o_orderdate"), F.lit("1970-01-01").cast("date")
+            ).alias("d"),
+        )
+        b = raw.agg(
+            F.min("c").alias("cmin"),
+            F.greatest(F.max("c") - F.min("c"), F.lit(1)).alias("cspan"),
+            F.min("d").alias("dmin"),
+            F.greatest(F.max("d") - F.min("d"), F.lit(1)).alias("dspan"),
+        )
+        dims = raw.crossJoin(F.broadcast(b)).select(
+            "o_orderkey",
+            "c",
+            "d",
+            F.expr("((c - cmin) * 65535) div cspan").alias("x"),
+            F.expr("((d - dmin) * 65535) div dspan").alias("y"),
+        )
+        z = dims.withColumn(
+            "zval", F.expr(_z_interleave_sql("x", "y", div="div")).cast("bigint")
+        ).withColumn(
+            "zbucket", (F.col("zval") / (2 ** (2 * _Z_BITS - 3))).cast("bigint")
+        )
+        z.write.mode("overwrite").partitionBy("zbucket").parquet(out)
+
+    ensure_built(out, build)
     back = spark.read.parquet(out)
     return back.groupBy(F.col("zbucket").cast("bigint").alias("zbucket")).agg(
         F.count("*").alias("n"),
@@ -1430,23 +1436,21 @@ def scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the XML reader is a file-per-task scan like any text
     source; rowTag streaming means elements parse incrementally, not
     DOM-load the file. The staged landing dir is fingerprint-keyed."""
-    key = sf_dir.strip("/").replace("/", "_")
-    leaf = f"docs_xml_{src_fingerprint(sf_dir, 'documents')}"
-    gc_stale_siblings(os.path.join(_SCRATCH, key), "docs_xml_", leaf)
-    d = os.path.join(_SCRATCH, key, leaf)
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
-        with build_lock(d):
-            if not os.path.exists(os.path.join(d, "_SUCCESS")):
-                docs = load_table(spark, sf_dir, "documents").select(
-                    "doc_id", "source", "n_chars", "text"
-                )
-                (
-                    docs.repartition(4)
-                    .write.mode("overwrite")
-                    .format("xml")
-                    .option("rowTag", "doc")
-                    .save(d)
-                )
+    d = scratch_path(sf_dir, "documents", "docs_xml_")
+
+    def build(d: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select(
+            "doc_id", "source", "n_chars", "text"
+        )
+        (
+            docs.repartition(4)
+            .write.mode("overwrite")
+            .format("xml")
+            .option("rowTag", "doc")
+            .save(d)
+        )
+
+    ensure_built(d, build)
     back = (
         spark.read.format("xml")
         .option("rowTag", "doc")
@@ -1487,35 +1491,33 @@ def scan_csv_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     task — the same land-many-medium-files rule as gzip; fix at first
     hop by rewriting to parquet. The n_with_newlines column keeps the
     injected population visible in the contract."""
-    key = sf_dir.strip("/").replace("/", "_")
-    leaf = f"docs_mlcsv_{src_fingerprint(sf_dir, 'documents')}"
-    gc_stale_siblings(os.path.join(_SCRATCH, key), "docs_mlcsv_", leaf)
-    d = os.path.join(_SCRATCH, key, leaf)
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
-        with build_lock(d):
-            if not os.path.exists(os.path.join(d, "_SUCCESS")):
-                docs = load_table(spark, sf_dir, "documents").select(
-                    "doc_id",
-                    "source",
-                    "n_chars",
-                    F.when(
-                        F.col("n_chars") % 7 == 0,
-                        F.concat(
-                            F.substring("text", 1, 20),
-                            F.lit("\n"),
-                            F.substring("text", 21, 20),
-                        ),
-                    )
-                    .otherwise(F.substring("text", 1, 40))
-                    .alias("snippet"),
-                )
-                (
-                    docs.repartition(4)
-                    .write.mode("overwrite")
-                    .option("header", "true")
-                    .option("quoteAll", "true")
-                    .csv(d)
-                )
+    d = scratch_path(sf_dir, "documents", "docs_mlcsv_")
+
+    def build(d: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select(
+            "doc_id",
+            "source",
+            "n_chars",
+            F.when(
+                F.col("n_chars") % 7 == 0,
+                F.concat(
+                    F.substring("text", 1, 20),
+                    F.lit("\n"),
+                    F.substring("text", 21, 20),
+                ),
+            )
+            .otherwise(F.substring("text", 1, 40))
+            .alias("snippet"),
+        )
+        (
+            docs.repartition(4)
+            .write.mode("overwrite")
+            .option("header", "true")
+            .option("quoteAll", "true")
+            .csv(d)
+        )
+
+    ensure_built(d, build)
     back = (
         spark.read.option("header", "true")
         .option("multiLine", "true")
@@ -1540,27 +1542,20 @@ def _stage_doc_binfiles(spark: SparkSession, sf_dir: str) -> str:
     """Stage every doc_id % 5 == 0 document as an individual
     ``doc_{id}.txt`` file (fingerprint-keyed, idempotent) — the shape
     of a raw multimodal landing zone: one opaque file per asset."""
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    leaf = f"documents_binfiles_{src_fingerprint(sf_dir, 'documents')}"
-    out = os.path.join(parent, leaf)
-    gc_stale_siblings(parent, "documents_binfiles_", leaf)
-    marker = os.path.join(out, "_STAGED")
-    if not os.path.exists(marker):
-        with build_lock(out):
-            if not os.path.exists(marker):
-                os.makedirs(out, exist_ok=True)
-                rows = (
-                    load_table(spark, sf_dir, "documents")
-                    .filter(F.col("doc_id") % 5 == 0)
-                    .select("doc_id", "text")
-                    .toLocalIterator()  # staging fixture: bounded subset, driver-side write
-                )
-                for r in rows:
-                    with open(os.path.join(out, f"doc_{r.doc_id}.txt"), "wb") as f:
-                        f.write(r.text.encode("utf-8"))
-                with open(marker, "w"):
-                    pass
+    out = scratch_path(sf_dir, "documents", "documents_binfiles_")
+
+    def build(out: str) -> None:
+        rows = (
+            load_table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") % 5 == 0)
+            .select("doc_id", "text")
+            .toLocalIterator()  # staging fixture: bounded subset, driver-side write
+        )
+        for r in rows:
+            with open(os.path.join(out, f"doc_{r.doc_id}.txt"), "wb") as f:
+                f.write(r.text.encode("utf-8"))
+
+    ensure_built(out, build)
     return out
 
 
@@ -1699,24 +1694,21 @@ def sink_catalog_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stage_lineitem_bloom(spark: SparkSession, sf_dir: str) -> str:
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    leaf = f"lineitem_bloomcol_{src_fingerprint(sf_dir, 'lineitem')}"
-    out = os.path.join(parent, leaf)
-    gc_stale_siblings(parent, "lineitem_bloomcol_", leaf)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        with build_lock(out):
-            if not os.path.exists(os.path.join(out, "_SUCCESS")):
-                li = load_table(spark, sf_dir, "lineitem").select(
-                    "l_orderkey", "l_partkey", "l_quantity"
-                )
-                (
-                    li.repartition(4)
-                    .write.mode("overwrite")
-                    .option("parquet.bloom.filter.enabled#l_partkey", "true")
-                    .option("parquet.bloom.filter.expected.ndv#l_partkey", "20000")
-                    .parquet(out)
-                )
+    out = scratch_path(sf_dir, "lineitem", "lineitem_bloomcol_")
+
+    def build(out: str) -> None:
+        li = load_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_partkey", "l_quantity"
+        )
+        (
+            li.repartition(4)
+            .write.mode("overwrite")
+            .option("parquet.bloom.filter.enabled#l_partkey", "true")
+            .option("parquet.bloom.filter.expected.ndv#l_partkey", "20000")
+            .parquet(out)
+        )
+
+    ensure_built(out, build)
     return out
 
 
@@ -1766,22 +1758,19 @@ def _stage_events_eu_csv(spark: SparkSession, sf_dir: str) -> str:
     """Stage events as CSV with a European day-first timestamp format
     (fingerprint-keyed) — the landing-zone reality: upstream exports
     are rarely ISO-8601."""
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    leaf = f"events_eucsv_{src_fingerprint(sf_dir, 'events')}"
-    out = os.path.join(parent, leaf)
-    gc_stale_siblings(parent, "events_eucsv_", leaf)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        with build_lock(out):
-            if not os.path.exists(os.path.join(out, "_SUCCESS")):
-                ev = load_table(spark, sf_dir, "events").select(
-                    "event_id",
-                    F.date_format("ts", _EU_TS_FMT).alias("ts_eu"),
-                    "user_id",
-                    "event_type",
-                    "value",
-                )
-                ev.write.mode("overwrite").option("header", "true").csv(out)
+    out = scratch_path(sf_dir, "events", "events_eucsv_")
+
+    def build(out: str) -> None:
+        ev = load_table(spark, sf_dir, "events").select(
+            "event_id",
+            F.date_format("ts", _EU_TS_FMT).alias("ts_eu"),
+            "user_id",
+            "event_type",
+            "value",
+        )
+        ev.write.mode("overwrite").option("header", "true").csv(out)
+
+    ensure_built(out, build)
     return out
 
 
@@ -1887,19 +1876,13 @@ def sink_delete_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     cleaned = _delete_cascade_frames(cust, orders, li)
 
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    fp = src_fingerprint(sf_dir, "orders")
-    leaf = f"gdpr_clean_{fp}"
-    gc_stale_siblings(parent, "gdpr_clean_", leaf)
-    out = os.path.join(parent, leaf)
-    if not os.path.exists(os.path.join(out, "_DONE")):
-        with build_lock(out):
-            if not os.path.exists(os.path.join(out, "_DONE")):
-                for name, df in cleaned.items():
-                    df.write.mode("overwrite").parquet(os.path.join(out, name))
-                with open(os.path.join(out, "_DONE"), "w") as fh:
-                    fh.write("ok")
+    out = scratch_path(sf_dir, "orders", "gdpr_clean_")
+
+    def build(out: str) -> None:
+        for name, df in cleaned.items():
+            df.write.mode("overwrite").parquet(os.path.join(out, name))
+
+    ensure_built(out, build)
 
     def row(name: str, src: DataFrame) -> DataFrame:
         after = spark.read.parquet(os.path.join(out, name))
@@ -1945,23 +1928,20 @@ def sink_python_datasource_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not _HAS_PY_DATASOURCE:  # pragma: no cover
         raise NotImplementedError("requires Spark 4 Python DataSource API")
     _register_docbin(spark)
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    leaf = f"docbin_written_{src_fingerprint(sf_dir, 'documents')}"
-    gc_stale_siblings(parent, "docbin_written_", leaf)
-    out = os.path.join(parent, leaf)
-    if not os.path.exists(os.path.join(out, "_DONE")):
-        with build_lock(out):
-            if not os.path.exists(os.path.join(out, "_DONE")):
-                (
-                    load_table(spark, sf_dir, "documents")
-                    .select("doc_id", "source", "n_chars")
-                    .repartition(6)  # >1 writer task: the commit protocol is the point
-                    .write.format("docbin")
-                    .mode("overwrite")
-                    .option("path", out)
-                    .save()
-                )
+    out = scratch_path(sf_dir, "documents", "docbin_written_")
+
+    def build(out: str) -> None:
+        (
+            load_table(spark, sf_dir, "documents")
+            .select("doc_id", "source", "n_chars")
+            .repartition(6)  # >1 writer task: the commit protocol is the point
+            .write.format("docbin")
+            .mode("overwrite")
+            .option("path", out)
+            .save()
+        )
+
+    ensure_built(out, build)
     back = spark.read.format("docbin").option("path", out).load()
     return back.groupBy("source").agg(
         F.count("*").alias("n_docs"),
@@ -2050,26 +2030,20 @@ def scan_merge_on_read_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     size so a silently-empty sidecar can't pass. A real table
     eventually compacts (sink_compact_small_files) to fold vectors into
     the base — the read path is what this query pins."""
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    fp = src_fingerprint(sf_dir, "orders")
-    leaf = f"mor_orders_{fp}"
-    gc_stale_siblings(parent, "mor_orders_", leaf)
-    root = os.path.join(parent, leaf)
+    root = scratch_path(sf_dir, "orders", "mor_orders_")
     orders = load_table(spark, sf_dir, "orders")
-    if not os.path.exists(os.path.join(root, "_DONE")):
-        with build_lock(root):
-            if not os.path.exists(os.path.join(root, "_DONE")):
-                orders.write.mode("overwrite").parquet(os.path.join(root, "base"))
-                (
-                    orders.filter(F.col("o_orderkey") % 131 == 5)
-                    .select("o_orderkey")
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(os.path.join(root, "deletes"))
-                )
-                with open(os.path.join(root, "_DONE"), "w") as fh:
-                    fh.write("ok")
+
+    def build(root: str) -> None:
+        orders.write.mode("overwrite").parquet(os.path.join(root, "base"))
+        (
+            orders.filter(F.col("o_orderkey") % 131 == 5)
+            .select("o_orderkey")
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(os.path.join(root, "deletes"))
+        )
+
+    ensure_built(root, build)
     base = spark.read.parquet(os.path.join(root, "base"))
     dv = spark.read.parquet(os.path.join(root, "deletes"))
     live = base.join(F.broadcast(dv), "o_orderkey", "left_anti")
@@ -2308,14 +2282,8 @@ def sink_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     (O(batch), not O(table)); publish is a metadata operation (marker
     write / rename) regardless of data size — exactly why WAP is
     viable at 100 TB where rewrite-on-validate is not."""
-    import shutil
+    root = scratch_path(sf_dir, "documents", "wap_")
 
-    key = sf_dir.strip("/").replace("/", "_")
-    parent = os.path.join(_SCRATCH, key)
-    fp = src_fingerprint(sf_dir, "documents")
-    leaf = f"wap_{fp}"
-    gc_stale_siblings(parent, "wap_", leaf)
-    root = os.path.join(parent, leaf)
     docs = load_table(spark, sf_dir, "documents")
     good = docs.groupBy("source").agg(
         F.count("*").alias("n_docs"),
@@ -2328,28 +2296,25 @@ def sink_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_docs",
         "sum_chars",
     )
-    done = os.path.join(root, "_WAP_DONE")
-    if not os.path.exists(done):
-        with build_lock(root):
-            if not os.path.exists(done):
-                shutil.rmtree(root, ignore_errors=True)
-                for name, df in (("good", good), ("bad", bad)):
-                    df.coalesce(1).write.mode("overwrite").parquet(
-                        os.path.join(root, "staging", name)
-                    )
-                for name in ("good", "bad"):
-                    staged = spark.read.parquet(os.path.join(root, "staging", name))
-                    audit = staged.agg(
-                        F.count("*").alias("n_rows"),
-                        (F.count("*") - F.count("source")).alias("n_null_keys"),
-                    ).first()
-                    if audit["n_null_keys"] == 0 and audit["n_rows"] > 0:
-                        pub = os.path.join(root, "published", name)
-                        shutil.copytree(os.path.join(root, "staging", name), pub)
-                        with open(os.path.join(root, f"_PUBLISHED_{name}"), "w") as fh:
-                            fh.write(pub)
-                with open(done, "w") as fh:
-                    fh.write("ok")
+
+    def build(root: str) -> None:
+        for name, df in (("good", good), ("bad", bad)):
+            df.coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(root, "staging", name)
+            )
+        for name in ("good", "bad"):
+            staged = spark.read.parquet(os.path.join(root, "staging", name))
+            audit = staged.agg(
+                F.count("*").alias("n_rows"),
+                (F.count("*") - F.count("source")).alias("n_null_keys"),
+            ).first()
+            if audit["n_null_keys"] == 0 and audit["n_rows"] > 0:
+                pub = os.path.join(root, "published", name)
+                shutil.copytree(os.path.join(root, "staging", name), pub)
+                with open(os.path.join(root, f"_PUBLISHED_{name}"), "w") as fh:
+                    fh.write(pub)
+
+    ensure_built(root, build)
 
     rows = []
     for name in ("good", "bad"):
@@ -2425,6 +2390,8 @@ def _stage_prune_file(spark: SparkSession, sf_dir: str) -> str:
 
     if fresh():
         return path
+    # not ensure_built: the oracle SQL names this fixed path, so
+    # freshness is the fingerprint in the marker, not the path
     with build_lock(d):
         if fresh():  # rebuilt while we waited on the lock
             return path
@@ -2688,49 +2655,37 @@ def sink_hilbert_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
             s >>= 1
         return pd.Series(dd)
 
-    key = sf_dir.strip("/").replace("/", "_")
-    leaf = f"orders_hilbert{_HB}_{src_fingerprint(sf_dir, 'orders')}"
-    gc_stale_siblings(os.path.join(_SCRATCH, key), "orders_hilbert_", leaf)
-    out = os.path.join(_SCRATCH, key, leaf)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        with build_lock(out):
-            if not os.path.exists(os.path.join(out, "_SUCCESS")):
-                orders = load_table(spark, sf_dir, "orders")
-                raw = orders.select(
-                    "o_orderkey",
-                    F.col("o_custkey").alias("c"),
-                    F.datediff(
-                        F.col("o_orderdate"), F.lit("1970-01-01").cast("date")
-                    ).alias("d"),
-                )
-                b = raw.agg(
-                    F.min("c").alias("cmin"),
-                    F.greatest(F.max("c") - F.min("c"), F.lit(1)).alias(
-                        "cspan"
-                    ),
-                    F.min("d").alias("dmin"),
-                    F.greatest(F.max("d") - F.min("d"), F.lit(1)).alias(
-                        "dspan"
-                    ),
-                )
-                dims = raw.crossJoin(F.broadcast(b)).select(
-                    "o_orderkey",
-                    F.expr(
-                        f"((c - cmin) * {2 ** _HB - 1}) div cspan"
-                    ).alias("xr"),
-                    F.expr(
-                        f"((d - dmin) * {2 ** _HB - 1}) div dspan"
-                    ).alias("yr"),
-                )
-                keyed = dims.withColumn(
-                    "hkey", hkey_udf(F.col("xr"), F.col("yr"))
-                ).withColumn(
-                    "hbucket",
-                    F.expr(f"hkey div {2 ** (2 * _HB - 3)}").cast("bigint"),
-                )
-                keyed.write.mode("overwrite").partitionBy("hbucket").parquet(
-                    out
-                )
+    out = scratch_path(sf_dir, "orders", f"orders_hilbert{_HB}_")
+
+    def build(out: str) -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        raw = orders.select(
+            "o_orderkey",
+            F.col("o_custkey").alias("c"),
+            F.datediff(
+                F.col("o_orderdate"), F.lit("1970-01-01").cast("date")
+            ).alias("d"),
+        )
+        b = raw.agg(
+            F.min("c").alias("cmin"),
+            F.greatest(F.max("c") - F.min("c"), F.lit(1)).alias("cspan"),
+            F.min("d").alias("dmin"),
+            F.greatest(F.max("d") - F.min("d"), F.lit(1)).alias("dspan"),
+        )
+        dims = raw.crossJoin(F.broadcast(b)).select(
+            "o_orderkey",
+            F.expr(f"((c - cmin) * {2 ** _HB - 1}) div cspan").alias("xr"),
+            F.expr(f"((d - dmin) * {2 ** _HB - 1}) div dspan").alias("yr"),
+        )
+        keyed = dims.withColumn(
+            "hkey", hkey_udf(F.col("xr"), F.col("yr"))
+        ).withColumn(
+            "hbucket",
+            F.expr(f"hkey div {2 ** (2 * _HB - 3)}").cast("bigint"),
+        )
+        keyed.write.mode("overwrite").partitionBy("hbucket").parquet(out)
+
+    ensure_built(out, build)
     back = spark.read.parquet(out).withColumn(
         "zkey", F.expr(_z8_sql("xr", "yr", div="div")).cast("bigint")
     )

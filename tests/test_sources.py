@@ -1,12 +1,20 @@
 """Staged-copy lifecycle for the multi-format scan operators
 (sources/formats.py): fingerprint keying plus garbage collection of
 stale fingerprints, so a data swap invalidates derived scratch dirs
-without letting /tmp grow without bound."""
+without letting the scratch tree grow without bound; and the one
+staging protocol (``scratch_path`` + ``ensure_built``) every staged
+artifact in the package goes through."""
 
 from __future__ import annotations
 
+import ast
 import os
 import shutil
+import threading
+import time
+from pathlib import Path
+
+import pytest
 
 from tests.conftest import SF_DIR
 
@@ -54,6 +62,206 @@ def test_stage_gc_leaves_other_tables_alone(spark, tmp_path):
     assert _stage(spark, str(data_dir), "region", "csv") == region
     assert os.path.exists(os.path.join(nation, "_SUCCESS"))
 
+
+
+class _Boom(Exception):
+    pass
+
+
+def _raise(_out):
+    raise _Boom
+
+
+# (build, marker text ensure_built returns, or the exception it raises)
+_ENSURE_BUILT_CASES = {
+    "note": (lambda out: "v002", "v002"),
+    "no_note": (lambda out: None, ""),
+    "raises": (_raise, _Boom),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_ENSURE_BUILT_CASES))
+def test_ensure_built_protocol(tmp_path, case):
+    """A build that returns leaves ``out`` with its files and a marker
+    holding the note, and a second call reuses it without building; a
+    build that raises leaves no ``out``, no marker and no temp marker,
+    and the next call builds afresh."""
+    from pyspark_xgboost_spark.sources.formats import ensure_built
+
+    build, want = _ENSURE_BUILT_CASES[case]
+    out = str(tmp_path / "artifact")
+    os.makedirs(out)
+    open(os.path.join(out, "stale.txt"), "w").close()  # a half-built leftover
+    if want is _Boom:
+        with pytest.raises(_Boom):
+            ensure_built(out, build)
+        assert not os.path.exists(out)
+        assert sorted(os.listdir(tmp_path)) == ["artifact.lock"]
+        assert ensure_built(out, lambda d: "rebuilt") == "rebuilt"
+        return
+    assert ensure_built(out, build) == want
+    assert "stale.txt" not in os.listdir(out)
+    assert ensure_built(out, _raise) == want  # built once: no second build
+
+
+def test_ensure_built_builds_once_across_threads(tmp_path):
+    """Eight threads ensuring one artifact run its build once, and
+    every thread gets the same marker text."""
+    from pyspark_xgboost_spark.sources.formats import ensure_built
+
+    out = str(tmp_path / "artifact")
+    calls = []
+
+    def build(d):
+        calls.append(d)
+        time.sleep(0.2)  # hold the lock while the other threads arrive
+        return "built"
+
+    got = []
+    threads = [
+        threading.Thread(target=lambda: got.append(ensure_built(out, build)))
+        for _ in range(8)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert calls == [out]
+    assert got == ["built"] * 8
+
+
+def _scratch_dir(data_dir):
+    from pyspark_xgboost_spark.sources.formats import _SCRATCH
+
+    return os.path.join(_SCRATCH, str(data_dir).strip("/").replace("/", "_"))
+
+
+def test_failed_staging_leaves_no_partial_tree(spark, tmp_path):
+    """A staged batch fixture whose second batch fails to build leaves
+    neither its first batch file nor a marker, and the next call
+    stages all batches."""
+    from pyspark.sql import functions as F
+
+    from pyspark_xgboost_spark.streaming.stream import _stage_seq_batches
+
+    data_dir = tmp_path / "data"
+    data_dir.mkdir()
+    shutil.copy(os.path.join(SF_DIR, "documents.parquet"), data_dir)
+
+    def failing(docs, seq):
+        if seq == 1:
+            raise _Boom
+        return docs.select("doc_id", F.lit(seq).alias("seq"))
+
+    try:
+        with pytest.raises(_Boom):
+            _stage_seq_batches(spark, str(data_dir), "failfix_", failing)
+        assert [
+            n for n in os.listdir(_scratch_dir(data_dir)) if not n.endswith(".lock")
+        ] == []
+        root = _stage_seq_batches(
+            spark,
+            str(data_dir),
+            "failfix_",
+            lambda docs, seq: docs.select("doc_id", F.lit(seq).alias("seq")),
+        )
+        assert sorted(os.listdir(os.path.join(root, "in"))) == [
+            "batch-000.parquet", "batch-001.parquet", "batch-002.parquet"
+        ]
+    finally:
+        shutil.rmtree(_scratch_dir(data_dir), ignore_errors=True)
+
+
+def test_skew_fact_restage_keeps_one_copy(spark, tmp_path):
+    """The skew-join fact staging is fingerprint-keyed and collected
+    like every staged artifact: after a data swap, one copy remains."""
+    from pyspark_xgboost_spark.operators.temporal import (
+        _SKEW_FACT_FILES,
+        _skew_fact_staged,
+    )
+
+    data_dir = tmp_path / "data"
+    data_dir.mkdir()
+    shutil.copy(os.path.join(SF_DIR, "lineitem.parquet"), data_dir)
+    prefix = f"lineitem_skewrg{_SKEW_FACT_FILES}_"
+    try:
+        n = _skew_fact_staged(spark, str(data_dir)).count()
+        st = os.stat(data_dir / "lineitem.parquet")
+        os.utime(data_dir / "lineitem.parquet", ns=(st.st_atime_ns, st.st_mtime_ns + 1))
+        assert _skew_fact_staged(spark, str(data_dir)).count() == n
+        copies = [
+            name
+            for name in os.listdir(_scratch_dir(data_dir))
+            if name.startswith(prefix) and not name.endswith(".lock")
+        ]
+        assert len(copies) == 1
+        assert os.path.exists(
+            os.path.join(_scratch_dir(data_dir), copies[0], "_STAGED")
+        )
+    finally:
+        shutil.rmtree(_scratch_dir(data_dir), ignore_errors=True)
+
+
+# The staging protocol's owners, and the deliberate exceptions with
+# their reasons. Nothing else in the package takes a build lock,
+# collects stale scratch siblings, derives the scratch key from sf_dir
+# or names a /tmp path.
+_STAGING_OWNERS = {"_SCRATCH", "scratch_path", "ensure_built"}
+_STAGING_EXCEPTIONS = {
+    # its fixed path is named literally in its oracle SQL, and it
+    # checks freshness by a fingerprint stored in its marker
+    "_stage_prune_file",
+    "_prune_staged_path",
+    # collects stale warehouse tables and catalog entries, not scratch
+    "sink_bucketed_join",
+}
+
+
+def _staging_offence(node):
+    if isinstance(node, ast.Call):
+        name = getattr(node.func, "id", getattr(node.func, "attr", None))
+        if name in ("build_lock", "gc_stale_siblings"):
+            return name
+        f = node.func
+        if (
+            isinstance(f, ast.Attribute)
+            and f.attr == "replace"
+            and isinstance(f.value, ast.Call)
+            and getattr(f.value.func, "attr", None) == "strip"
+        ):
+            return "scratch key derivation"
+    if (
+        isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and node.value.startswith("/tmp")
+    ):
+        return "/tmp literal"
+    return None
+
+
+def _top_level_name(stmt):
+    if isinstance(stmt, (ast.FunctionDef, ast.ClassDef)):
+        return stmt.name
+    if isinstance(stmt, ast.Assign) and len(stmt.targets) == 1:
+        return getattr(stmt.targets[0], "id", None)
+    return None
+
+
+def test_staging_has_one_implementation():
+    """Regrowth guard for the staging protocol (see the two sets
+    above)."""
+    pkg = Path(__file__).resolve().parents[1] / "pyspark_xgboost_spark"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        for stmt in ast.parse(path.read_text()).body:
+            name = _top_level_name(stmt)
+            if name in _STAGING_OWNERS | _STAGING_EXCEPTIONS:
+                continue
+            for node in ast.walk(stmt):
+                what = _staging_offence(node)
+                if what:
+                    offenders.append((path.name, name, node.lineno, what))
+    assert not offenders, offenders
 
 def _chk_scan_text_profile_matches_batch(spark):
     from pyspark.sql import functions as F

@@ -472,6 +472,32 @@ def _is_conf_call(node, methods):
     )
 
 
+
+def test_schema_probe_memo_keeps_one_entry_per_file(tmp_path, monkeypatch):
+    """Regenerating a probed file replaces its memo entry (keyed by
+    path; mtime and size are checked on the hit) instead of adding
+    one, and the re-probe returns the new schema. Spark-free: the
+    probe's only Spark call is stubbed."""
+    import types
+
+    from pyspark_xgboost_spark.streaming import stream
+
+    schemas = iter(["first", "second"])
+    fake = types.SimpleNamespace(
+        read=types.SimpleNamespace(
+            parquet=lambda path: types.SimpleNamespace(schema=next(schemas))
+        )
+    )
+    monkeypatch.setattr(stream, "_SCHEMA_PROBE_MEMO", {})
+    p = tmp_path / "t.parquet"
+    p.write_bytes(b"x")
+    assert stream._probe_parquet_schema(fake, str(p)) == "first"
+    assert stream._probe_parquet_schema(fake, str(p)) == "first"  # memo hit
+    st = os.stat(p)
+    os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns + 1))
+    assert stream._probe_parquet_schema(fake, str(p)) == "second"
+    assert list(stream._SCHEMA_PROBE_MEMO) == [os.path.abspath(p)]
+
 # Pooled contract sweep (smoke-sweep discipline; see test_plans_r11).
 _POOLED_CHECKS_STREAMING = [_chk_stream_tumbling_equals_batch, _chk_stream_session_equals_batch, _chk_stateful_user_stats_totals, _chk_stream_static_join_equals_batch, _chk_stream_static_join_is_stateless, _chk_kafka_shape_source_equals_parquet_source, _chk_stream_left_outer_join_contract, _chk_stream_merge_upsert_incremental_chain]
 
